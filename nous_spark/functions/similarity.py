@@ -164,13 +164,6 @@ def dice_sim_col(a_words, b_words):
     ).cast("double")
 
 
-def jaccard_col(a, b):
-    """F10 (MathUtils.scala:51-56) as a Column expression over arrays."""
-    return F.size(F.array_intersect(a, b)) / F.greatest(
-        F.size(F.array_union(a, b)), F.lit(1)
-    ).cast("double")
-
-
 def cosine_col(a, b):
     """Cosine similarity between two ARRAY<DOUBLE> columns, JVM-side."""
     dot = F.aggregate(

@@ -368,18 +368,11 @@ def compact_canonical_store(
         folded = folded.unionByName(
             keep.select("root", "rep", "bucket", "seg"))
 
-    def swap(tmp, live):
-        jvm = spark._jvm
-        p_live = jvm.org.apache.hadoop.fs.Path(live)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_live.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p_live, True)
-        if not fs.rename(p_tmp, p_live):
-            raise IOError(f"compaction swap failed: {tmp} -> {live}")
+    from nous_spark.operators.graph_inc import swap_dir
 
     folded.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
         "bucket", "seg").parquet(f"{path}/reps_compact_tmp")
-    swap(f"{path}/reps_compact_tmp", f"{path}/reps")
+    swap_dir(spark, f"{path}/reps_compact_tmp", f"{path}/reps")
     return compact_component_store(spark, f"{path}/cc",
                                    exclude_segs=exclude_segs)
 

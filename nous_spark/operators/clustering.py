@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nous_spark.localrel import hand_back
+
 # output schema, fixed so the driver fast path never schema-infers (an
 # empty pandas frame has no inferable types)
 _PIC_OUT_SCHEMA = "id long, cluster int, embedding double"
@@ -26,7 +28,7 @@ _KMEANS_DRIVER_CAP = 4_000_000
 
 # symmetrized edge lists at or under this row count run the WHOLE power
 # iteration driver-side from one Arrow collect (~24 B/edge ≈ 1.5 GB at the
-# cap — the session driver is 48 g): the distributed matvec is one shuffle
+# cap): the distributed matvec is one shuffle
 # per round, and on a small graph every round is pure stage/scheduling
 # overhead — measured 10-12 s for a 1,000-vertex graph at local[32] vs
 # <2 s collected; the NumPy bincount matvec handles 46M edges x 6 rounds
@@ -126,13 +128,10 @@ def _pic_driver(spark, edges_pdf, k, max_iter, kmeans_iter, init, seed,
     v = v / norm
     centroids = np.asarray(_lloyd_1d(np.sort(v), k, kmeans_iter))
     assign = np.argmin(np.abs(v[:, None] - centroids[None, :]), axis=1)
-    return spark.createDataFrame(
-        pd.DataFrame({
-            "id": ids,
-            "cluster": assign.astype("int32"),
-            "embedding": v,
-        }),
-        schema=_PIC_OUT_SCHEMA,
+    return hand_back(
+        spark,
+        {"id": ids, "cluster": assign.astype("int32"), "embedding": v},
+        _PIC_OUT_SCHEMA,
     )
 
 
@@ -146,7 +145,6 @@ def power_iteration_clustering(
     weight: str = "weight",
     init: str | DataFrame = "random",
     seed: int = 42,
-    driver_edge_cap: int = _PIC_EDGE_DRIVER_CAP,
 ) -> DataFrame:
     """Cluster an undirected weighted similarity graph. Returns
     (id, cluster, embedding).
@@ -198,14 +196,16 @@ def power_iteration_clustering(
     # (the caller's init frame may be arbitrarily large).
     if isinstance(init, str):
         canon = canon.persist()
-        if 2 * canon.count() <= driver_edge_cap:
+        if 2 * canon.count() <= _PIC_EDGE_DRIVER_CAP:
             spark = sim.sparkSession
             cpdf = canon.toPandas()
             canon.unpersist()
             if len(cpdf) == 0:
                 # empty / fully-filtered similarity frame: a typed empty
-                # result, not a CANNOT_INFER_EMPTY_SCHEMA crash
-                return spark.createDataFrame([], schema=_PIC_OUT_SCHEMA)
+                # result (the NumPy loop has no vertex to start from)
+                return hand_back(
+                    spark, {"id": [], "cluster": [], "embedding": []},
+                    _PIC_OUT_SCHEMA)
             return _pic_driver(spark, cpdf, k, max_iter, kmeans_iter,
                                init, seed, canonical=True)
 

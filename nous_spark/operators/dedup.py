@@ -410,8 +410,7 @@ def simhash_near_duplicates(
 
 
 def near_duplicate_clusters(pairs: DataFrame, a_col: str = "a",
-                            b_col: str = "b",
-                            driver_edge_cap: int = 16_000_000) -> DataFrame:
+                            b_col: str = "b") -> DataFrame:
     """Turn near-duplicate PAIRS into a keep/drop decision: transitive
     closure over the pair graph (near-dup is not transitive in general,
     but dedup policy must be — if a~b and b~c, keeping both a and c
@@ -419,14 +418,10 @@ def near_duplicate_clusters(pairs: DataFrame, a_col: str = "a",
     keeper = min id per cluster.
 
     The pair graph is SMALL relative to the corpus by construction
-    (every candidate generator is blocked), so up to ``driver_edge_cap``
-    pairs the components run as a driver-side union-find over one Arrow
-    collect — exact, one pass, none of the iterative star/star rounds'
-    fixed per-round shuffle cost (the same capped fast-path pattern as
-    PIC, parity-tested via ``driver_edge_cap=0``). Above the cap — a
-    pair set that big means the thresholds are wrong long before the
-    driver is — the distributed large-star/small-star loop takes over
-    unchanged. At the 16M-edge default the Arrow collect plus Python-dict working set is roughly 2-4 GiB of driver heap/RSS (two longs per edge in Arrow, then dict/set entries per vertex) — size ``spark.driver.memory`` accordingly or lower the cap.
+    (every candidate generator is blocked), so ``connected_components``
+    usually takes its driver fast path; a pair set above its
+    ``DRIVER_EDGE_CAP`` — thresholds far too loose — takes the
+    distributed large-star/small-star loop unchanged.
 
     Returns (id, keeper_id) for every id that appears in a pair; rows
     with id != keeper_id form the drop list. Compose:
@@ -437,40 +432,12 @@ def near_duplicate_clusters(pairs: DataFrame, a_col: str = "a",
     """
     from nous_spark.operators.graph import connected_components
 
-    e = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    if driver_edge_cap > 0:
-        # localCheckpoint, not persist: blocks are released when the
-        # returned plan is GC'd, on BOTH branches (the old persist()
-        # leaked on the distributed branch)
-        e = e.localCheckpoint(eager=True)
-        if e.count() <= driver_edge_cap:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:
-                    parent[x], x = r, parent[x]
-                return r
-
-            pdf = e.toPandas()
-            for u, v in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    # union by MIN root so the representative is the
-                    # cluster minimum without a second pass
-                    lo, hi = min(ru, rv), max(ru, rv)
-                    parent[hi] = lo
-            from nous_spark.localrel import local_df
-
-            rows = [(x, find(x)) for x in parent]
-            id_type = dict(e.dtypes)["src"]
-            return local_df(
-                e.sparkSession, rows, f"id {id_type}, keeper_id {id_type}"
-            )
+    # localCheckpoint, not persist: the pair generator runs once for
+    # CC's cap count and collect, and the blocks are released when the
+    # returned plan is GC'd
+    e = pairs.select(
+        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+    ).localCheckpoint(eager=True)
     comp = connected_components(e)
     return comp.select("id", F.col("component").alias("keeper_id"))
 
@@ -935,14 +902,7 @@ def compact_minhash_index(spark, path: str,
         return df.select(
             F.input_file_name().alias("f")).distinct().count()
 
-    def swap(tmp, live):
-        jvm = spark._jvm
-        p_live = jvm.org.apache.hadoop.fs.Path(live)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_live.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p_live, True)
-        if not fs.rename(p_tmp, p_live):
-            raise IOError(f"compaction swap failed: {tmp} -> {live}")
+    from nous_spark.operators.graph_inc import swap_dir
 
     banded = spark.read.parquet(f"{path}/banded")
     shingle = spark.read.parquet(f"{path}/shingles")
@@ -959,8 +919,8 @@ def compact_minhash_index(spark, path: str,
     _spread(shingle.withColumn("seg", seg_out)).write.mode(
         "overwrite").partitionBy("seg").parquet(
         f"{path}/shingles_compact_tmp")
-    swap(f"{path}/banded_compact_tmp", f"{path}/banded")
-    swap(f"{path}/shingles_compact_tmp", f"{path}/shingles")
+    swap_dir(spark, f"{path}/banded_compact_tmp", f"{path}/banded")
+    swap_dir(spark, f"{path}/shingles_compact_tmp", f"{path}/shingles")
     return {
         "banded_files_before": nb,
         "banded_files_after": files_of(

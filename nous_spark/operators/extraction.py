@@ -221,12 +221,3 @@ def extract_triples_normalized(
         schema=NARROW_TRIPLE_SCHEMA,
     )
     return triples, docs
-
-
-def type_triples(triples: DataFrame) -> DataFrame:
-    """N7 view: the rdf:type rows (TripleParser.scala:331-337)."""
-    return triples.filter(F.col("pred") == "rdf:type")
-
-
-def relation_triples(triples: DataFrame) -> DataFrame:
-    return triples.filter(F.col("kind") == "rel")

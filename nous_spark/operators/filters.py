@@ -33,16 +33,6 @@ def normalize_fields(df: DataFrame, cols: list[str]) -> DataFrame:
     return out
 
 
-def confidence_filter(df: DataFrame, threshold: float = 0.98) -> DataFrame:
-    """F3 (TripleParser.scala:362)."""
-    return df.filter(F.col("conf") > threshold)
-
-
-def relation_filter(df: DataFrame) -> DataFrame:
-    """F4 (TripleFilter.scala:8-14): drop predicates starting with 's."""
-    return df.filter(~F.col("pred").startswith("'s"))
-
-
 def purge_longest_object(
     df: DataFrame, group_cols: tuple[str, ...] = ("src", "subj", "pred"),
     obj_col: str = "obj",

@@ -11,6 +11,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nous_spark.localrel import hand_back
+
+# Edge count at or under which connected_components, k_core and
+# label_propagation (and near_duplicate_clusters, through CC) skip their
+# per-round distributed loops: one Arrow collect, the kernel on the
+# driver, the result back through ``hand_back``. Below it every
+# distributed round is mostly fixed shuffle and scheduling cost; above
+# it the driver's working set is the limit. At 16M edges the Arrow
+# collect plus the kernel's arrays (or, for k_core, Python dict/set
+# entries per vertex) take roughly 2-4 GiB of driver heap/RSS — size
+# ``spark.driver.memory`` to match, or lower this constant.
+DRIVER_EDGE_CAP = 16_000_000
+
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """A10: vertex degree (both directions). Map-side partial aggregation
@@ -218,7 +231,6 @@ def connected_components(
     max_iter: int = 20,
     checkpoint_dir: str | None = None,
     stats: dict | None = None,
-    driver_edge_cap: int = 16_000_000,
 ) -> DataFrame:
     """G8: connected components via alternating large-star / small-star
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -244,15 +256,14 @@ def connected_components(
     ids (min = lexicographic for strings, matching F.min). Lineage is
     truncated every round via localCheckpoint so plans stay bounded.
 
-    Up to ``driver_edge_cap`` raw (self-loop-free) edges, components run
-    as a driver-side union-find over one Arrow collect instead — exact,
-    min-root (so the representative is the component minimum for
-    numbers and strings alike), one pass, none of the per-round shuffle
-    + fixed-point-confirmation cost (the same capped fast-path pattern
-    as PIC and near_duplicate_clusters; parity-tested via
-    ``driver_edge_cap=0``). The distributed star/star loop serves
-    anything larger unchanged, and sets ``stats["rounds"]``; the driver
-    path sets ``stats["mode"] = "driver"`` instead. At the 16M-edge default the Arrow collect plus Python-dict working set is roughly 2-4 GiB of driver heap/RSS (two longs per edge in Arrow, then dict/set entries per vertex) — size ``spark.driver.memory`` accordingly or lower the cap.
+    Up to ``DRIVER_EDGE_CAP`` raw (self-loop-free) edges, components run
+    on the driver over one Arrow collect instead — exact, min-root (so
+    the representative is the component minimum for numbers and strings
+    alike), none of the per-round shuffle + fixed-point-confirmation
+    cost (parity-tested against the distributed loop). The distributed
+    star/star loop serves anything larger unchanged, and sets
+    ``stats["rounds"]``; the driver path sets ``stats["mode"] =
+    "driver"`` instead.
     """
     # self-loops dropped; the vertex universe is fixed from the input so
     # star-rewiring can't lose isolated-after-filter vertices
@@ -269,7 +280,7 @@ def connected_components(
     # were ~80% of the 1.5M-edge wall): one cheap count job, one Arrow
     # collect of the raw projection, done. Min-propagation is oriented-
     # duplicate-insensitive, so NumPy needs no dedup either.
-    if driver_edge_cap > 0 and e0.count() <= driver_edge_cap:
+    if e0.count() <= DRIVER_EDGE_CAP:
         # vectorized hash-to-min over factorized vertex RANKS: sorting
         # the vertex universe first makes "min rank" == "min id" (for
         # longs and strings alike), so min-propagation + pointer
@@ -277,7 +288,6 @@ def connected_components(
         # All NumPy array passes — a per-edge python union-find loop
         # measured 3 s + 2 s of find-compression at 1.5M edges
         import numpy as np
-        import pandas as pd
 
         pdf = e0.toPandas()
         uniq = np.unique(
@@ -300,26 +310,9 @@ def connected_components(
         if stats is not None:
             stats["mode"] = "driver"
         id_type = dict(e0.dtypes)["x"]
-        if len(uniq) == 0:
-            return e0.sparkSession.createDataFrame(
-                [], schema=f"id {id_type}, component {id_type}"
-            )
-        # hand the mapping back as a parquet scratch file, not a
-        # driver-local relation: createDataFrame(pandas) + one downstream
-        # action measured 4.5 s at 1.65M rows (the local relation is
-        # re-shipped per job), the pyarrow write + parquet scan 0.5 s —
-        # and the multi-row-group file gives downstream consumers a
-        # splittable, re-readable input
-        import tempfile
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pa.table({"id": pa.array(uniq),
-                        "component": pa.array(uniq[comp])})
-        d = tempfile.mkdtemp(prefix="nous_cc_scratch_")
-        pq.write_table(tbl, f"{d}/mapping.parquet", row_group_size=1 << 17)
-        return e0.sparkSession.read.parquet(d)
+        return hand_back(e0.sparkSession,
+                         {"id": uniq, "component": uniq[comp]},
+                         f"id {id_type}, component {id_type}")
 
     verts = (
         e0.select(F.col("x").alias("id"))
@@ -561,7 +554,6 @@ def k_core(
     dst: str = "dst",
     max_iter: int = 50,
     stats: dict | None = None,
-    driver_edge_cap: int = 16_000_000,
 ) -> DataFrame:
     """Vertices of the k-core: the maximal subgraph where every vertex
     has degree ≥ k (undirected, simple). The standard noise filter
@@ -579,17 +571,16 @@ def k_core(
     ~O(m) on real degree distributions. Returns (id, core_degree) for
     surviving vertices; empty frame if the k-core is empty.
 
-    Up to ``driver_edge_cap`` canonical edges the peel runs driver-side
-    over one Arrow collect (exact, no per-round shuffle cost — the PIC
-    fast-path pattern, parity-tested via ``driver_edge_cap=0``); the
-    distributed loop takes over above the cap. ``stats["rounds"]`` is
-    reported by the distributed loop only (the driver peel is
-    round-free). At the 16M-edge default the Arrow collect plus Python-dict working set is roughly 2-4 GiB of driver heap/RSS (two longs per edge in Arrow, then dict/set entries per vertex) — size ``spark.driver.memory`` accordingly or lower the cap.
+    Up to ``DRIVER_EDGE_CAP`` canonical edges the peel runs driver-side
+    over one Arrow collect (exact, no per-round shuffle cost,
+    parity-tested against the distributed loop); the distributed loop
+    takes over above the cap. ``stats["rounds"]`` is reported by the
+    distributed loop only (the driver peel is round-free).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
     cur = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
-    if driver_edge_cap > 0 and cur.count() <= driver_edge_cap:
+    if cur.count() <= DRIVER_EDGE_CAP:
         from collections import defaultdict
 
         adj = defaultdict(set)
@@ -610,12 +601,11 @@ def k_core(
                     changed = True
         if stats is not None:
             stats["converged"] = True
-        from nous_spark.localrel import local_df
-
+        ids = sorted(adj)
         id_type = dict(cur.dtypes)["a"]
-        return local_df(
+        return hand_back(
             cur.sparkSession,
-            sorted((v, len(ns)) for v, ns in adj.items()),
+            {"id": ids, "core_degree": [len(adj[v]) for v in ids]},
             f"id {id_type}, core_degree bigint",
         )
     rounds, converged = 0, False
@@ -658,7 +648,6 @@ def label_propagation(
     dst: str = "dst",
     max_iter: int = 10,
     stats: dict | None = None,
-    driver_edge_cap: int = 16_000_000,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
     al. 2007), made fully deterministic: every vertex starts with its own
@@ -675,65 +664,60 @@ def label_propagation(
     discipline as connected_components). Returns (id, label) where label
     is a community representative's vertex id.
 
-    Up to ``driver_edge_cap`` canonical edges the sync loop runs
+    Up to ``DRIVER_EDGE_CAP`` canonical edges the sync loop runs
     driver-side over one Arrow collect — bit-identical updates (same
     tie-break, same cap, same stability stop), none of the per-round
     shuffle overhead; the distributed loop takes over above the cap
-    (parity-tested via ``driver_edge_cap=0``). At the 16M-edge default the Arrow collect plus Python-dict working set is roughly 2-4 GiB of driver heap/RSS (two longs per edge in Arrow, then dict/set entries per vertex) — size ``spark.driver.memory`` accordingly or lower the cap.
+    (parity-tested against it).
     """
-    e = _canonical_edges(edges, src, dst)
-    if driver_edge_cap > 0:
-        e = e.localCheckpoint(eager=True)
-        if e.count() <= driver_edge_cap:
-            # Vectorized sync rounds over factorized vertex RANKS (the
-            # vertex universe is sorted, so rank order == id order for
-            # longs and strings alike). Per round: neighbor-label pairs
-            # sorted by (vertex, label) → run-length counts → per vertex
-            # the first (count desc, label asc) row — exactly the
-            # Counter/min tie-break the per-vertex Python loop applied,
-            # which measured ~1.5 s/round at 1.5M edges vs ~0.1 s here.
-            import numpy as np
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=True)
+    if e.count() <= DRIVER_EDGE_CAP:
+        # Vectorized sync rounds over factorized vertex RANKS (the
+        # vertex universe is sorted, so rank order == id order for
+        # longs and strings alike). Per round: neighbor-label pairs
+        # sorted by (vertex, label) → run-length counts → per vertex
+        # the first (count desc, label asc) row — exactly the
+        # Counter/min tie-break the per-vertex Python loop applied,
+        # which measured ~1.5 s/round at 1.5M edges vs ~0.1 s here.
+        import numpy as np
 
-            pdf = e.toPandas()
-            a = pdf["a"].to_numpy()
-            b = pdf["b"].to_numpy()
-            uniq = np.unique(np.concatenate([a, b]))
-            n = len(uniq)
-            sym_u = np.concatenate([np.searchsorted(uniq, a),
-                                    np.searchsorted(uniq, b)])
-            sym_v = np.concatenate([np.searchsorted(uniq, b),
-                                    np.searchsorted(uniq, a)])
-            label = np.arange(n, dtype=np.int64)
-            rounds = 0
-            for rounds in range(1, max_iter + 1):
-                lv = label[sym_v]
-                # group neighbor labels per vertex: one int64 composite
-                # key (safe: ranks < n, n*n < 2^63 at any driver cap)
-                key = sym_u.astype(np.int64) * n + lv
-                grp, cnt = np.unique(key, return_counts=True)
-                gu = grp // n
-                gl = grp % n
-                # per vertex: count desc, label asc; lexsort is
-                # last-key-primary, and within equal (gu, cnt) the
-                # sorted `grp` order already yields ascending labels
-                order = np.lexsort((gl, -cnt, gu))
-                gu_o = gu[order]
-                first = np.ones(len(gu_o), dtype=bool)
-                first[1:] = gu_o[1:] != gu_o[:-1]
-                nxt = label.copy()
-                nxt[gu_o[first]] = gl[order][first]
-                if np.array_equal(nxt, label):
-                    break
-                label = nxt
-            if stats is not None:
-                stats["rounds"] = rounds
-            import pandas as pd
-
-            id_type = dict(e.dtypes)["a"]
-            return e.sparkSession.createDataFrame(
-                pd.DataFrame({"id": uniq, "label": uniq[label]}),
-                f"id {id_type}, label {id_type}",
-            )
+        pdf = e.toPandas()
+        a = pdf["a"].to_numpy()
+        b = pdf["b"].to_numpy()
+        uniq = np.unique(np.concatenate([a, b]))
+        n = len(uniq)
+        sym_u = np.concatenate([np.searchsorted(uniq, a),
+                                np.searchsorted(uniq, b)])
+        sym_v = np.concatenate([np.searchsorted(uniq, b),
+                                np.searchsorted(uniq, a)])
+        label = np.arange(n, dtype=np.int64)
+        rounds = 0
+        for rounds in range(1, max_iter + 1):
+            lv = label[sym_v]
+            # group neighbor labels per vertex: one int64 composite
+            # key (safe: ranks < n, n*n < 2^63 at any driver cap)
+            key = sym_u.astype(np.int64) * n + lv
+            grp, cnt = np.unique(key, return_counts=True)
+            gu = grp // n
+            gl = grp % n
+            # per vertex: count desc, label asc; lexsort is
+            # last-key-primary, and within equal (gu, cnt) the
+            # sorted `grp` order already yields ascending labels
+            order = np.lexsort((gl, -cnt, gu))
+            gu_o = gu[order]
+            first = np.ones(len(gu_o), dtype=bool)
+            first[1:] = gu_o[1:] != gu_o[:-1]
+            nxt = label.copy()
+            nxt[gu_o[first]] = gl[order][first]
+            if np.array_equal(nxt, label):
+                break
+            label = nxt
+        if stats is not None:
+            stats["rounds"] = rounds
+        id_type = dict(e.dtypes)["a"]
+        return hand_back(e.sparkSession,
+                         {"id": uniq, "label": uniq[label]},
+                         f"id {id_type}, label {id_type}")
     sym = e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("u"), F.col("b").alias("v")) \

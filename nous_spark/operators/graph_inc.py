@@ -158,11 +158,31 @@ def update_components(
 # ---------------------------------------------------------------------------
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop Path, its FileSystem) for ``path``."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    p, fs = _fs_path(spark, path)
     return fs.exists(p)
+
+
+def _fs_delete(spark: SparkSession, path: str) -> None:
+    p, fs = _fs_path(spark, path)
+    fs.delete(p, True)
+
+
+def swap_dir(spark: SparkSession, tmp: str, live: str) -> None:
+    """The compaction swap: delete ``live``, rename the freshly written
+    ``tmp`` into its place. Only this delete+rename is a non-atomic
+    window; a crash inside it leaves ``tmp`` to be renamed back by hand.
+    Raises IOError if the rename fails."""
+    p_live, fs = _fs_path(spark, live)
+    fs.delete(p_live, True)
+    if not fs.rename(_fs_path(spark, tmp)[0], p_live):
+        raise IOError(f"compaction swap failed: {tmp} -> {live}")
 
 
 def _read_remap(spark: SparkSession, path: str, id_type: str,
@@ -446,15 +466,6 @@ def compact_component_store(
     the streaming ingest excludes the possibly-torn in-flight batch so
     its replay can still replace its own segment.
     """
-    def swap(tmp, live):
-        jvm = spark._jvm
-        p_live = jvm.org.apache.hadoop.fs.Path(live)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_live.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p_live, True)
-        if not fs.rename(p_tmp, p_live):
-            raise IOError(f"compaction swap failed: {tmp} -> {live}")
-
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     m = spark.read.schema(_mapping_schema(meta.id_type)).parquet(
         f"{path}/mapping")
@@ -480,7 +491,7 @@ def compact_component_store(
             keep.select("id", "component", "bucket", "seg"))
     out.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
         "bucket", "seg").parquet(f"{path}/mapping_compact_tmp")
-    swap(f"{path}/mapping_compact_tmp", f"{path}/mapping")
+    swap_dir(spark, f"{path}/mapping_compact_tmp", f"{path}/mapping")
 
     typ = meta.id_type
     kept_remap = []
@@ -498,12 +509,9 @@ def compact_component_store(
             schema=f"component {typ}, new_component {typ}, seg STRING",
         ).coalesce(1).write.mode("overwrite").partitionBy("seg").parquet(
             f"{path}/remap_compact_tmp")
-        swap(f"{path}/remap_compact_tmp", f"{path}/remap")
+        swap_dir(spark, f"{path}/remap_compact_tmp", f"{path}/remap")
     else:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/remap")
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(p, True)
+        _fs_delete(spark, f"{path}/remap")
     return {
         "mapping_files_before": n_files,
         "mapping_files_after": spark.read.parquet(f"{path}/mapping")

@@ -58,14 +58,6 @@ def split_frequent(supports: DataFrame, mis_support: int) -> tuple[DataFrame, Da
     return freq, infreq
 
 
-def window_support_union(per_batch_supports: list[DataFrame]) -> DataFrame:
-    """A3 (:513-522): merge per-batch supports into window totals."""
-    out = per_batch_supports[0]
-    for df in per_batch_supports[1:]:
-        out = out.unionByName(df)
-    return out.groupBy("pattern_key").agg(F.sum("support").alias("support"))
-
-
 def cumulative_pattern_count(per_batch: DataFrame) -> DataFrame:
     """A5 (:580-588): sum supports across batches."""
     return per_batch.groupBy("pattern_key").agg(F.sum("support").alias("support"))
@@ -77,13 +69,6 @@ def filter_frequent_instances(instances: DataFrame, frequent: DataFrame) -> Data
     explicit sc.broadcast."""
     return instances.join(
         F.broadcast(frequent.select("pattern_key")), "pattern_key", "left_semi"
-    )
-
-
-def remove_redundant(frequent: DataFrame, redundant: DataFrame) -> DataFrame:
-    """J9/SO4 (:460): frequent minus redundant — left-anti join."""
-    return frequent.join(
-        redundant.select("pattern_key"), "pattern_key", "left_anti"
     )
 
 

@@ -127,20 +127,6 @@ def _one_edge_postings(edges: DataFrame) -> DataFrame:
     ).dropDuplicates(["pattern_key", "var_pos", "node"])
 
 
-def _pair_match_postings(matches: DataFrame, key) -> DataFrame:
-    """Melt (x, y, z) matches of one pair pattern to postings rows."""
-    melted = matches.select(F.explode(F.array(
-        F.struct(F.lit(0).alias("var_pos"), F.col("x").alias("node")),
-        F.struct(F.lit(1).alias("var_pos"), F.col("y").alias("node")),
-        F.struct(F.lit(2).alias("var_pos"), F.col("z").alias("node")),
-    )).alias("pv"))
-    return melted.select(
-        key.alias("pattern_key"),
-        F.col("pv.var_pos").alias("var_pos"),
-        F.col("pv.node").alias("node"),
-    ).dropDuplicates(["pattern_key", "var_pos", "node"])
-
-
 def _pair_postings_sets(e1: DataFrame, e2: DataFrame, shape: str,
                         key, symmetric: bool = False) -> DataFrame:
     """Per-position DISTINCT node sets of a two-edge pattern, computed
@@ -285,20 +271,6 @@ def _chain3_matches(e1: DataFrame, e2: DataFrame,
                         F.col("obj").alias("w")), "z")
         .select("x", "y", "z", "w")
     )
-
-
-def _chain3_match_postings(matches: DataFrame, key) -> DataFrame:
-    melted = matches.select(F.explode(F.array(
-        F.struct(F.lit(0).alias("var_pos"), F.col("x").alias("node")),
-        F.struct(F.lit(1).alias("var_pos"), F.col("y").alias("node")),
-        F.struct(F.lit(2).alias("var_pos"), F.col("z").alias("node")),
-        F.struct(F.lit(3).alias("var_pos"), F.col("w").alias("node")),
-    )).alias("pv"))
-    return melted.select(
-        key.alias("pattern_key"),
-        F.col("pv.var_pos").alias("var_pos"),
-        F.col("pv.node").alias("node"),
-    ).dropDuplicates(["pattern_key", "var_pos", "node"])
 
 
 def _chain3_delta_terms(delta: DataFrame, prior: DataFrame | None,
@@ -695,15 +667,10 @@ def compact_mis_store(
         edges, f"{path}/edges_tmp", ["pred", "seg"], "pred",
         dynamic=False)
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    from nous_spark.operators.graph_inc import swap_dir
+
     for name in ("postings", "counts", "edges"):
-        live = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}")
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/{name}_tmp")
-        fs = live.getFileSystem(conf)
-        fs.delete(live, True)
-        if not fs.rename(tmp, live):
-            raise IOError(f"compaction swap failed for {name}")
+        swap_dir(spark, f"{path}/{name}_tmp", f"{path}/{name}")
     files_after = len(
         spark.read.parquet(f"{path}/postings").inputFiles())
     return {"files_before": files_before, "files_after": files_after}

@@ -221,19 +221,9 @@ def compact_triple_store(
         .write.mode("overwrite").partitionBy("pred", "seg")
         .parquet(f"{path}/triples_compact_tmp")
     )
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    from nous_spark.operators.graph_inc import _fs_delete, swap_dir
 
-    def swap(tmp: str, live: str) -> None:
-        p_live = jvm.org.apache.hadoop.fs.Path(live)
-        p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-        fs = p_live.getFileSystem(conf)
-        fs.delete(p_live, True)
-        if not fs.rename(p_tmp, p_live):
-            raise IOError(f"compaction swap failed: {tmp} -> {live}")
-
-    swap(f"{path}/triples_compact_tmp", f"{path}/triples")
-    p_patches = jvm.org.apache.hadoop.fs.Path(f"{path}/patches")
-    p_patches.getFileSystem(conf).delete(p_patches, True)
+    swap_dir(spark, f"{path}/triples_compact_tmp", f"{path}/triples")
+    _fs_delete(spark, f"{path}/patches")
     n_files_after = len(spark.read.parquet(f"{path}/triples").inputFiles())
     return {"files_before": n_files_before, "files_after": n_files_after}

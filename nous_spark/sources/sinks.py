@@ -40,10 +40,6 @@ def write_triples(
     w.partitionBy("pred").parquet(path)
 
 
-def read_triples(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_triples_encoded(
     triples: DataFrame,
     path: str,
@@ -134,20 +130,6 @@ def write_pattern_outputs(frequent: DataFrame, per_batch: DataFrame,
         f"{root}/frequent_patterns_per_batch"
     )
     dep_edges.write.mode("overwrite").parquet(f"{root}/dependency_graph")
-
-
-def dump_graph(vertices: DataFrame, edges: DataFrame, root: str) -> None:
-    """S15 (dumpGraphObj :625-676): parquet checkpoint of a graph —
-    also the resume format."""
-    vertices.write.mode("overwrite").parquet(f"{root}/vertices")
-    edges.write.mode("overwrite").parquet(f"{root}/edges")
-
-
-def load_graph(spark: SparkSession, root: str) -> tuple[DataFrame, DataFrame]:
-    return (
-        spark.read.parquet(f"{root}/vertices"),
-        spark.read.parquet(f"{root}/edges"),
-    )
 
 
 def write_training_shards(

@@ -23,8 +23,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from nous_spark.operators import graph
     from nous_spark.operators.graph import connected_components
     from nous_spark.session import get_spark
+
+    # no input fits a cap of -1: every shape runs the distributed
+    # star/star loop, the one whose rounds this probe counts
+    graph.DRIVER_EDGE_CAP = -1
 
     spark = get_spark(cores=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
                       app_name="cc_rounds_probe")
@@ -34,8 +39,7 @@ def main() -> None:
         df = spark.createDataFrame(edges, ["src", "dst"])
         stats: dict = {}
         t0 = time.monotonic()
-        comp = connected_components(df, max_iter=40, stats=stats,
-                                    driver_edge_cap=0)
+        comp = connected_components(df, max_iter=40, stats=stats)
         rows = comp.collect()
         wall = round(time.monotonic() - t0, 2)
         n_comp = len({r.component for r in rows})

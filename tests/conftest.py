@@ -5,6 +5,10 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM small
+# get_spark's 48g default heap lets ParallelGC grow the one test JVM past
+# the RAM of a 15 GB host (12-14 GB RSS by the end of the gate tests),
+# where the kernel kills it mid-suite; the whole suite passes at 4g
+os.environ.setdefault("NOUS_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")
@@ -18,3 +22,24 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def distributed():
+    """``with distributed():`` runs the capped driver fast paths
+    (connected_components, k_core, label_propagation,
+    near_duplicate_clusters, PIC) on their distributed loops instead, so
+    a test can compare both paths on the same input. A cap of -1 admits
+    no input, not even an empty one."""
+    import contextlib
+
+    from nous_spark.operators import clustering, graph
+
+    @contextlib.contextmanager
+    def force():
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(graph, "DRIVER_EDGE_CAP", -1)
+            mp.setattr(clustering, "_PIC_EDGE_DRIVER_CAP", -1)
+            yield
+
+    return force

@@ -98,15 +98,15 @@ def test_pic_weight_filter_and_symmetry(spark):
     assert by_id[2] == by_id[3]
 
 
-def test_pic_driver_path_matches_distributed(spark, two_cliques):
+def test_pic_driver_path_matches_distributed(spark, two_cliques,
+                                             distributed):
     """The small-graph driver fast path (one Arrow collect + NumPy loop)
     must produce the same clustering as the distributed matvec path with
-    the same "random" init (forced via driver_edge_cap=0)."""
+    the same "random" init."""
     sim = spark.createDataFrame(two_cliques, ["src", "dst", "weight"])
     fast = power_iteration_clustering(sim, k=2, max_iter=10).collect()
-    dist = power_iteration_clustering(
-        sim, k=2, max_iter=10, driver_edge_cap=0
-    ).collect()
+    with distributed():
+        dist = power_iteration_clustering(sim, k=2, max_iter=10).collect()
     groups_f, groups_d = {}, {}
     for r in fast:
         groups_f.setdefault(r.cluster, set()).add(r.id)

@@ -258,14 +258,15 @@ def test_k_core_peels_tail(spark):
     assert k_core(e, 5).count() == 0
 
 
-def test_k_core_cascade_rounds(spark):
+def test_k_core_cascade_rounds(spark, distributed):
     # a chain peels one vertex per round from each end: stats sees > 1
     # round on the DISTRIBUTED loop (the driver fast path is round-free,
     # so force it off)
     edges = [(i, i + 1) for i in range(12)]
     e = spark.createDataFrame(edges, ["src", "dst"])
     stats = {}
-    out = k_core(e, 2, stats=stats, driver_edge_cap=0).collect()
+    with distributed():
+        out = k_core(e, 2, stats=stats).collect()
     assert out == []
     assert stats["rounds"] > 1
     assert k_core(e, 2).collect() == []  # fast path agrees on emptiness
@@ -412,7 +413,7 @@ def test_label_propagation_vs_python_oracle(spark):
     assert blob1.most_common(1)[0][1] >= 0.8 * sum(blob1.values())
 
 
-def test_label_propagation_string_ids(spark):
+def test_label_propagation_string_ids(spark, distributed):
     """String vertex ids must work on BOTH paths — CC and k_core accept
     them, and the tie-break is (count desc, label asc) lexicographic."""
     from nous_spark.operators.graph import label_propagation
@@ -424,14 +425,14 @@ def test_label_propagation_string_ids(spark):
     want = _lpa_oracle(edges, max_iter=10)
     got_drv = {r.id: r.label
                for r in label_propagation(e, max_iter=10).collect()}
-    got_dist = {r.id: r.label
-                for r in label_propagation(
-                    e, max_iter=10, driver_edge_cap=0).collect()}
+    with distributed():
+        got_dist = {r.id: r.label
+                    for r in label_propagation(e, max_iter=10).collect()}
     assert got_drv == want
     assert got_dist == want
 
 
-def test_k_core_raises_on_truncated_peel(spark):
+def test_k_core_raises_on_truncated_peel(spark, distributed):
     """An exhausted distributed peel must not silently return sub-k
     vertices: a 12-chain sheds only its endpoints per round, so
     max_iter=2 cannot finish — the call must raise and flag stats."""
@@ -442,8 +443,9 @@ def test_k_core_raises_on_truncated_peel(spark):
     edges = [(i, i + 1) for i in range(12)]
     e = spark.createDataFrame(edges, ["src", "dst"])
     stats = {}
-    with pytest.raises(RuntimeError, match="did not converge"):
-        k_core(e, 2, max_iter=2, stats=stats, driver_edge_cap=0)
+    with distributed(), pytest.raises(RuntimeError,
+                                      match="did not converge"):
+        k_core(e, 2, max_iter=2, stats=stats)
     assert stats["converged"] is False
     assert stats["rounds"] == 2
 
@@ -465,10 +467,10 @@ def test_label_propagation_stability_stop(spark):
     assert stats["rounds"] < 10
 
 
-def test_graph_driver_fast_paths_parity(spark):
+def test_graph_driver_fast_paths_parity(spark, distributed):
     """k_core and label_propagation driver fast paths must agree exactly
-    with their distributed loops (forced via driver_edge_cap=0) on the
-    same random graph."""
+    with their distributed loops on the same random graph, and give the
+    same typed empty result for an empty edge frame."""
     import random
 
     from nous_spark.operators.graph import k_core, label_propagation
@@ -476,15 +478,26 @@ def test_graph_driver_fast_paths_parity(spark):
     rng = random.Random(17)
     edges = list({(rng.randrange(60), rng.randrange(60)) for _ in range(200)})
     e = spark.createDataFrame(edges, ["src", "dst"])
-    for k in (2, 3, 4):
-        fast = {(r.id, r.core_degree) for r in k_core(e, k).collect()}
-        dist = {(r.id, r.core_degree)
-                for r in k_core(e, k, driver_edge_cap=0).collect()}
-        assert fast == dist, k
-    fast = {(r.id, r.label) for r in label_propagation(e).collect()}
-    dist = {(r.id, r.label)
-            for r in label_propagation(e, driver_edge_cap=0).collect()}
+    empty = spark.createDataFrame([], "src bigint, dst bigint")
+
+    def run():
+        out = {k: {(r.id, r.core_degree) for r in k_core(e, k).collect()}
+               for k in (2, 3, 4)}
+        out["lpa"] = {(r.id, r.label)
+                      for r in label_propagation(e).collect()}
+        for name, df in (("k_core", k_core(empty, 2)),
+                         ("lpa", label_propagation(empty))):
+            out[name, "empty"] = (df.collect(), df.dtypes)
+        return out
+
+    fast = run()
+    with distributed():
+        dist = run()
     assert fast == dist
+    assert fast["k_core", "empty"] == (
+        [], [("id", "bigint"), ("core_degree", "bigint")])
+    assert fast["lpa", "empty"] == (
+        [], [("id", "bigint"), ("label", "bigint")])
 
 
 def test_write_training_shards_roundtrip(spark, tmp_path):
@@ -551,9 +564,10 @@ def test_corpus_diff_statuses(spark):
     assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
-def test_connected_components_driver_path_parity(spark):
-    """CC driver union-find must agree exactly with the distributed
-    star/star loop, for long ids and for string ids."""
+def test_connected_components_driver_path_parity(spark, distributed):
+    """The CC driver path must agree exactly with the distributed
+    star/star loop, for long ids and for string ids, and give the same
+    typed empty result for an empty edge frame."""
     import random
 
     from nous_spark.operators.graph import connected_components
@@ -561,21 +575,27 @@ def test_connected_components_driver_path_parity(spark):
     rng = random.Random(23)
     edges = list({(rng.randrange(300), rng.randrange(300))
                   for _ in range(250)})
-    e = spark.createDataFrame(edges, ["src", "dst"])
-    fast = {(r.id, r.component)
-            for r in connected_components(e).collect()}
-    dist = {(r.id, r.component)
-            for r in connected_components(e, driver_edge_cap=0).collect()}
-    assert fast == dist
+    inputs = {
+        "long": spark.createDataFrame(edges, ["src", "dst"]),
+        "string": spark.createDataFrame(
+            [(f"n{a}", f"n{b}") for a, b in edges[:60]], ["src", "dst"]),
+        "empty": spark.createDataFrame([], "src bigint, dst bigint"),
+    }
 
-    se = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in edges[:60]], ["src", "dst"]
-    )
-    fast_s = {(r.id, r.component)
-              for r in connected_components(se).collect()}
-    dist_s = {(r.id, r.component)
-              for r in connected_components(se, driver_edge_cap=0).collect()}
-    assert fast_s == dist_s
+    def run():
+        out = {}
+        for name, e in inputs.items():
+            comp = connected_components(e)
+            out[name] = (set(map(tuple, comp.collect())), comp.dtypes)
+        return out
+
+    fast = run()
+    with distributed():
+        dist = run()
+    assert fast == dist
+    assert fast["string"][1] == [("id", "string"), ("component", "string")]
+    assert fast["empty"] == (set(), [("id", "bigint"),
+                                     ("component", "bigint")])
 
 
 def test_funnel_counts_vs_python_oracle(spark):

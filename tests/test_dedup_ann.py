@@ -264,10 +264,10 @@ def test_duplicate_spans_short_docs_and_min_docs(spark):
     assert {r.doc_id for r in got3.collect()} == {1, 2, 3}
 
 
-def test_near_dup_clusters_driver_path_parity(spark):
-    """The capped driver union-find must agree exactly with the
-    distributed star/star components (driver_edge_cap=0 forces the
-    distributed path on the same pairs)."""
+def test_near_dup_clusters_driver_path_parity(spark, distributed):
+    """The capped driver path must agree exactly with the distributed
+    star/star components on the same pairs — including an empty pair
+    set, which gives the same typed empty result on both paths."""
     import random
 
     from nous_spark.operators.dedup import near_duplicate_clusters
@@ -276,11 +276,18 @@ def test_near_dup_clusters_driver_path_parity(spark):
     pairs = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
     pairs = [(a, b) for a, b in pairs if a != b]
     df = spark.createDataFrame(pairs, ["a", "b"])
+    empty = spark.createDataFrame([], "a bigint, b bigint")
     fast = {(r.id, r.keeper_id)
             for r in near_duplicate_clusters(df).collect()}
-    dist = {(r.id, r.keeper_id)
-            for r in near_duplicate_clusters(df, driver_edge_cap=0).collect()}
+    fast_empty = near_duplicate_clusters(empty)
+    with distributed():
+        dist = {(r.id, r.keeper_id)
+                for r in near_duplicate_clusters(df).collect()}
+        dist_empty = near_duplicate_clusters(empty)
     assert fast == dist
+    assert fast_empty.collect() == dist_empty.collect() == []
+    assert fast_empty.dtypes == dist_empty.dtypes == [
+        ("id", "bigint"), ("keeper_id", "bigint")]
     # keeper is the component minimum
     comp = {}
     for i, k in fast:

@@ -193,7 +193,8 @@ def test_connected_components_string_ids(spark):
                     "x": "x", "y": "x"}
 
 
-def test_connected_components_long_chain_logarithmic_rounds(spark):
+def test_connected_components_long_chain_logarithmic_rounds(spark,
+                                                           distributed):
     """Chain/high-diameter stress for G8 (the worst case for
     hash-to-min): a 2048-vertex path with SHUFFLED vertex labels (so the
     min id sits at a random chain position) must converge in ~log2(n)
@@ -212,9 +213,9 @@ def test_connected_components_long_chain_logarithmic_rounds(spark):
     edges = spark.createDataFrame(
         [(perm(i), perm(i + 1)) for i in range(n - 1)], ["src", "dst"])
     stats = {}
-    comp = connected_components(edges, max_iter=30, stats=stats,
-                                driver_edge_cap=0)
-    rows = comp.collect()
+    with distributed():
+        rows = connected_components(edges, max_iter=30,
+                                    stats=stats).collect()
     assert len(rows) == n
     assert {r.component for r in rows} == {0}   # one component, min id 0
     # pointer jumping: rounds ~ log2(diameter) (+1 convergence-check
@@ -222,3 +223,40 @@ def test_connected_components_long_chain_logarithmic_rounds(spark):
     # O(n) a pure hash-to-min needs
     bound = 2 * math.ceil(math.log2(n)) + 1
     assert stats["rounds"] <= bound, (stats["rounds"], bound)
+    # the driver path gives the same mapping
+    assert sorted(rows) == sorted(connected_components(edges).collect())
+
+
+def test_driver_paths_leave_no_scratch_dirs(spark, tmp_path, monkeypatch):
+    """Every driver fast path hands its result back through a temp dir
+    that is gone before the call returns: with ``tempfile.tempdir`` at
+    ``tmp_path``, CC (long and string ids), k_core, label_propagation,
+    near_duplicate_clusters and PIC leave it empty."""
+    import os
+    import tempfile
+
+    from nous_spark.operators.clustering import power_iteration_clustering
+    from nous_spark.operators.dedup import near_duplicate_clusters
+    from nous_spark.operators.graph import (
+        connected_components,
+        k_core,
+        label_propagation,
+    )
+
+    edges = [(0, 1), (1, 2), (0, 2), (2, 3), (4, 5)]
+    e = spark.createDataFrame(edges, ["src", "dst"])
+    se = spark.createDataFrame(
+        [(f"v{a}", f"v{b}") for a, b in edges], ["src", "dst"])
+    sim = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in edges], ["src", "dst", "weight"])
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    results = [
+        connected_components(e),
+        connected_components(se),
+        k_core(e, 2),
+        label_propagation(e),
+        near_duplicate_clusters(e.toDF("a", "b")),
+        power_iteration_clustering(sim, k=2, max_iter=5),
+    ]
+    assert [df.count() for df in results] == [6, 6, 3, 6, 6, 6]
+    assert os.listdir(tmp_path) == []

@@ -8,27 +8,36 @@ audit.
   ``inputFiles()`` instead.
 - No row-at-a-time ``F.udf``: every Python-side kernel is Arrow-batched
   (pandas_udf / mapInPandas / mapInArrow / applyInPandas*).
+- No dead definitions: every top-level package function and class is
+  named somewhere in the repo's Python besides its own definition.
 """
 
 from __future__ import annotations
 
+import ast
+import collections
 import os
 import re
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))), "nous_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "nous_spark")
+
+
+def _py_files(root):
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs
+                   if not x.startswith(".") and x != "__pycache__"]
+        for fname in files:
+            if fname.endswith(".py"):
+                yield os.path.join(d, fname)
 
 
 def _source_lines():
-    for root, _, files in os.walk(PKG):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            with open(path) as fh:
-                for i, line in enumerate(fh, 1):
-                    stripped = line.split("#", 1)[0]
-                    yield f"{path}:{i}", stripped, line
+    for path in _py_files(PKG):
+        with open(path) as fh:
+            for i, line in enumerate(fh, 1):
+                stripped = line.split("#", 1)[0]
+                yield f"{path}:{i}", stripped, line
 
 
 def test_no_rdd_conversions_in_package():
@@ -41,3 +50,24 @@ def test_no_row_at_a_time_udfs_in_package():
     hits = [loc for loc, code, _ in _source_lines()
             if re.search(r"\bF\.udf\s*\(|\budf\s*\(\s*lambda", code)]
     assert hits == [], hits
+
+
+def test_every_package_definition_is_referenced():
+    """A top-level function or class whose name appears nowhere in the
+    repo's Python (package, tests, scripts, benchmarks) except its own
+    ``def``/``class`` line is dead code. Word match, not import
+    resolution: a mention in a test, a call site or a docstring counts."""
+    words = collections.Counter()
+    for path in _py_files(REPO):
+        with open(path) as fh:
+            words.update(re.findall(r"\w+", fh.read()))
+    defined = collections.Counter()
+    for path in _py_files(PKG):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defined[node.name] += 1
+    dead = sorted(n for n, k in defined.items() if words[n] <= k)
+    assert dead == [], dead

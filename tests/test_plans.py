@@ -110,20 +110,23 @@ def test_dictionary_encode_no_global_window(spark, sf_dir):
             assert "__pid" in line, f"global window in encode plan: {line}"
 
 
-def test_connected_components_log_rounds(spark):
+def test_connected_components_log_rounds(spark, distributed):
     """G8: a 300-edge chain must resolve within max_iter=12 rounds
-    (⌈log2 301⌉ = 9 < 12) — plain hash-to-min would need 300 rounds, so
-    correctness under this cap proves the pointer-jumping acceleration."""
+    (⌈log2 301⌉ = 9 < 12) on the distributed loop — plain hash-to-min
+    would need 300 rounds, so correctness under this cap proves the
+    pointer-jumping acceleration. The driver path agrees."""
     from nous_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], ["src", "dst"]
     )
-    comp = {r.id: r.component for r in
-            connected_components(
-                edges, max_iter=12, driver_edge_cap=0).collect()}
+    with distributed():
+        comp = {r.id: r.component for r in
+                connected_components(edges, max_iter=12).collect()}
     assert set(comp.values()) == {0}
     assert len(comp) == 301
+    assert comp == {r.id: r.component
+                    for r in connected_components(edges).collect()}
 
 
 def test_new_operators_no_cartesian_no_python(spark, sf_dir):

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(st.lists(st.tuples(st.integers(0, 25), st.integers(0, 25)),
                 min_size=1, max_size=50))
-def test_connected_components_matches_union_find(spark, edges):
+def test_connected_components_matches_union_find(spark, distributed, edges):
     from nous_spark.operators.graph import connected_components
 
     # union-find oracle
@@ -42,15 +42,20 @@ def test_connected_components_matches_union_find(spark, edges):
     want_groups = sorted(sorted(g) for g in want.values())
 
     e = spark.createDataFrame(list(set(edges)), ["src", "dst"])
-    comp = connected_components(e, driver_edge_cap=0)
+    # the hypothesis examples share one function-scoped fixture, so the
+    # distributed loop is forced per example, not per test
+    with distributed():
+        rows = connected_components(e).collect()
     got = {}
-    for r in comp.collect():
+    for r in rows:
         got.setdefault(r.component, set()).add(r.id)
     got_groups = sorted(sorted(g) for g in got.values())
     assert got_groups == want_groups
     # component representative = min id reachable (hash-to-min invariant)
-    for r in comp.collect():
+    for r in rows:
         assert r.component == min(g for g in got[r.component])
+    # the driver path gives the same mapping
+    assert sorted(rows) == sorted(connected_components(e).collect())
 
 
 def _las_reference(lines):
