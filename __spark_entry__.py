@@ -372,12 +372,12 @@ def _q_str_cc_ingest(spark, sf):  # §2.9 streaming canonicalization
 
 
 def _q_canonical_update(spark, sf):  # incremental canonical store
-    """Persisted canonical store (component store + representative log,
-    operators/canonicalize.py): built from customer<->nation alias
+    """Persisted canonical store (a component store over rep-order label
+    keys, operators/canonicalize.py): built from customer<->nation alias
     stars, then a delta folded in that BOTH adds labels
     (supplier<->nation) and MERGES components (nation<->region collapses
     each region's five nation stars into one), forcing the remap-log
-    re-rooting path for the rep argmin. Oracle: from-scratch
+    re-rooting path that dethrones representatives. Oracle: from-scratch
     min-propagation CC over the union edge set plus a window argmax for
     the rep rule (longest label, ties lexicographic) — the incremental
     store must resolve identically to a second engine's full

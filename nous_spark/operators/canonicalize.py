@@ -19,8 +19,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nous_spark.localrel import local_df
 from nous_spark.operators.graph import connected_components
+from nous_spark.operators.graph_inc import (
+    _fs_exists,
+    build_component_store,
+    compact_component_store,
+    resolve_component_store,
+    update_component_store,
+)
 
 SAMEAS_PREDICATES = ["owl:sameas", "sameas", "rdfs:label", "skos:preflabel",
                      "ispreferredmeaningof"]
@@ -154,17 +160,30 @@ def canonicalize(
 
 
 # ---------------------------------------------------------------------------
-# Incremental canonical store: component store over labels + an LSM
-# representative log, exact batch parity under incremental folds
+# Incremental canonical store: a component store over rep-order keys
 # ---------------------------------------------------------------------------
 
 
-def _rep_struct(label_col: str):
-    # the batch rule (canonical_mapping): longest label wins, ties to
-    # the lexicographically smallest — a total order, so the argmin is
-    # associative/commutative and therefore incrementally maintainable
-    return F.struct((-F.length(label_col)).alias("neg_len"),
-                    F.col(label_col).alias("label"))
+def _key(label_col: str):
+    # rep-order key: its byte order is the batch rep rule (longest label
+    # first, ties to the lexicographically smallest), so the component
+    # store's min-id root over these keys IS the canonical representative
+    return F.concat(
+        F.lpad((F.lit(2147483647) - F.length(label_col)).cast("string"),
+               10, "0"),
+        F.col(label_col),
+    )
+
+
+def _label(key_col: str):
+    return F.substr(F.col(key_col), F.lit(11))
+
+
+def _keyed_edges(alias_edges: DataFrame) -> DataFrame:
+    return alias_edges.filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+        & (F.col("a") != F.col("b"))
+    ).select(_key("a").alias("a"), _key("b").alias("b"))
 
 
 def build_canonical_store(
@@ -172,42 +191,14 @@ def build_canonical_store(
     path: str,
     buckets: int = 64,
 ) -> None:
-    """Persist an incrementally updatable canonical mapping:
-
-    - ``{path}/cc`` — a component store (operators/graph_inc.py) over
-      the LABELS themselves (component root = min label; internal
-      bookkeeping only, never the canonical representative).
-    - ``{path}/reps`` — the representative log: per segment, the best
-      (longest, then lexicographically smallest) label CANDIDATE per
-      root as of that write. Because the rep rule is an associative
-      argmin and every label contributes a candidate when it enters,
-      the final rep of a root is the argmin over all log rows whose
-      stored root RESOLVES to it through the cc store's remap log —
-      merges never have to re-scan component members, and the result
-      is exactly the batch ``canonical_mapping`` representative
-      (parity pinned by tests). Rows are bucket-partitioned by the
-      stored root's hash so probes prune to the touched roots' (and
-      their remap preimages') buckets.
-    """
-    from nous_spark.operators.graph_inc import build_component_store
-
-    edges = alias_edges.filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b")))
-    comp = connected_components(edges, "a", "b")
+    """Persist an incrementally updatable canonical mapping as a
+    component store (operators/graph_inc.py) at ``{path}/cc`` whose ids
+    are rep-order keys (``_key``): the store keeps every component's
+    minimum id as its root, and the minimum key is the batch
+    ``canonical_mapping`` representative, so root and representative
+    are one thing (parity pinned by tests)."""
+    comp = connected_components(_keyed_edges(alias_edges), "a", "b")
     build_component_store(comp, f"{path}/cc", buckets=buckets)
-    (
-        comp.groupBy("component")
-        .agg(F.min(_rep_struct("id"))["label"].alias("rep"))
-        .select(
-            F.col("component").alias("root"), "rep",
-            F.pmod(F.xxhash64("component"), F.lit(buckets)).alias("bucket"),
-        )
-        .withColumn("seg", F.lit("base"))
-        .repartition(F.col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket", "seg")
-        .parquet(f"{path}/reps")
-    )
 
 
 def update_canonical_store(
@@ -217,45 +208,12 @@ def update_canonical_store(
     update_id: int,
 ) -> dict:
     """Fold a delta alias-edge set into the canonical store under
-    segment ``u<update_id>`` — same keyed-overwrite idempotency
-    contract as the component store it wraps (reads exclude the
-    update's own segment; a torn attempt is replaced byte-for-byte).
-
-    Cost ∝ delta: the cc fold is ``update_component_store``; the rep
-    log gains one row per post-update root among the delta's NEW
-    labels (read back from the update's own freshly written mapping
-    segment — a one-segment scan). Merged components need no rep
-    recompute at all: their old candidates re-root through the remap
-    log at read time."""
-    from nous_spark.operators.graph_inc import update_component_store
-
-    seg = f"u{update_id}"
-    edges = alias_edges.filter(
-        F.col("a").isNotNull() & F.col("b").isNotNull()
-        & (F.col("a") != F.col("b")))
-    stats = update_component_store(spark, edges, f"{path}/cc",
-                                   update_id=update_id, src="a", dst="b")
-    meta = spark.read.parquet(f"{path}/cc/meta").collect()[0]
-    new_rows = spark.read.schema(
-        f"id {meta.id_type}, component {meta.id_type}, "
-        "bucket BIGINT, seg STRING"
-    ).parquet(f"{path}/cc/mapping").filter(F.col("seg") == seg)
-    (
-        new_rows.groupBy("component")
-        .agg(F.min(_rep_struct("id"))["label"].alias("rep"))
-        .select(
-            F.col("component").alias("root"), "rep",
-            F.pmod(F.xxhash64("component"),
-                   F.lit(meta.buckets)).alias("bucket"),
-        )
-        .withColumn("seg", F.lit(seg))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket", "seg")
-        .parquet(f"{path}/reps")
-    )
-    return stats
+    segment ``u<update_id>``: ``update_component_store`` over the keyed
+    edges, with its cost (∝ delta) and keyed-overwrite idempotency (a
+    torn attempt is replaced byte-for-byte by the replay)."""
+    return update_component_store(spark, _keyed_edges(alias_edges),
+                                  f"{path}/cc", update_id=update_id,
+                                  src="a", dst="b")
 
 
 def resolve_canonical_store(
@@ -265,58 +223,15 @@ def resolve_canonical_store(
     exclude_segs: tuple[str, ...] = (),
 ) -> DataFrame:
     """Current (label, canonical_label, canonical_id) view — the same
-    schema ``canonical_mapping`` returns, batch-parity by construction.
-    ``labels`` (a one-column ``id`` frame) prunes the cc read to the
-    touched buckets AND the rep read to the probed roots' buckets plus
-    their remap-preimage buckets (the flattened remap log is small, so
-    the preimage key set is driver-computable)."""
-    from nous_spark.operators.graph_inc import (
-        _flatten_remap,
-        _read_remap,
-        resolve_component_store,
-    )
-
-    meta = spark.read.parquet(f"{path}/cc/meta").collect()[0]
-    cc = resolve_component_store(spark, f"{path}/cc", ids=labels,
-                                 exclude_segs=exclude_segs)
-    remap_rows = _read_remap(spark, path + "/cc", meta.id_type,
-                             exclude_segs=exclude_segs)
-    flat = dict(_flatten_remap(remap_rows))
-    reps = spark.read.schema(
-        f"root {meta.id_type}, rep {meta.id_type}, "
-        "bucket BIGINT, seg STRING"
-    ).parquet(f"{path}/reps")
-    if exclude_segs:
-        reps = reps.filter(~F.col("seg").isin(*exclude_segs))
-    if labels is not None:
-        roots = {r.component for r in cc.select("component")
-                 .distinct().collect()}
-        keys = roots | {old for old, new in flat.items() if new in roots}
-        kdf = local_df(spark, [(k,) for k in sorted(keys)],
-                       schema=f"root {meta.id_type}")
-        bks = [r.b for r in kdf.select(
-            F.pmod(F.xxhash64("root"),
-                   F.lit(meta.buckets)).alias("b")).distinct().collect()]
-        reps = reps.filter(F.col("bucket").isin(bks)).join(kdf, "root")
-    if flat:
-        rmap = local_df(spark, sorted(flat.items()),
-                        schema=f"root {meta.id_type}, __new {meta.id_type}")
-        reps = (
-            reps.join(F.broadcast(rmap), "root", "left")
-            .withColumn("root", F.coalesce("__new", "root"))
-            .drop("__new")
-        )
-    final_reps = (
-        reps.groupBy("root")
-        .agg(F.min(_rep_struct("rep"))["label"].alias("canonical_label"))
-    )
-    return (
-        cc.join(final_reps, cc["component"] == final_reps["root"])
-        .select(
-            F.col("id").alias("label"),
-            "canonical_label",
-            F.xxhash64("canonical_label").alias("canonical_id"),
-        )
+    schema ``canonical_mapping`` returns. ``labels`` (a one-column
+    ``id`` frame) prunes the read to the buckets its keys hash to."""
+    ids = None if labels is None else labels.select(_key("id").alias("id"))
+    return resolve_component_store(
+        spark, f"{path}/cc", ids=ids, exclude_segs=exclude_segs
+    ).select(
+        _label("id").alias("label"),
+        _label("component").alias("canonical_label"),
+        F.xxhash64(_label("component")).alias("canonical_id"),
     )
 
 
@@ -325,143 +240,37 @@ def compact_canonical_store(
     path: str,
     exclude_segs: tuple[str, ...] = (),
 ) -> dict:
-    """Fold both logs: resolve + argmin the rep log into ``seg=base``
-    FIRST (it needs the cc remap log, which the cc compaction deletes),
-    then compact the cc store. Crash between the two leaves a folded
-    rep table plus a live remap log — harmless, the remap no-ops on
-    already-resolved rep roots, and the next compaction converges."""
-    from nous_spark.operators.graph_inc import (
-        _flatten_remap,
-        _read_remap,
-        compact_component_store,
-    )
-
-    meta = spark.read.parquet(f"{path}/cc/meta").collect()[0]
-    reps = spark.read.schema(
-        f"root {meta.id_type}, rep {meta.id_type}, "
-        "bucket BIGINT, seg STRING"
-    ).parquet(f"{path}/reps")
-    keep = reps.filter(F.col("seg").isin(*exclude_segs)) if exclude_segs \
-        else None
-    fold = reps.filter(~F.col("seg").isin(*exclude_segs)) if exclude_segs \
-        else reps
-    flat = dict(_flatten_remap(_read_remap(
-        spark, path + "/cc", meta.id_type, exclude_segs=exclude_segs)))
-    if flat:
-        rmap = local_df(spark, sorted(flat.items()),
-                        schema=f"root {meta.id_type}, __new {meta.id_type}")
-        fold = (
-            fold.join(F.broadcast(rmap), "root", "left")
-            .withColumn("root", F.coalesce("__new", "root"))
-            .drop("__new")
-        )
-    folded = (
-        fold.groupBy("root")
-        .agg(F.min(_rep_struct("rep"))["label"].alias("rep"))
-        .select(
-            "root", "rep",
-            F.pmod(F.xxhash64("root"), F.lit(meta.buckets)).alias("bucket"),
-        )
-        .withColumn("seg", F.lit("base"))
-    )
-    if keep is not None:
-        folded = folded.unionByName(
-            keep.select("root", "rep", "bucket", "seg"))
-
-    from nous_spark.operators.graph_inc import swap_dir
-
-    folded.repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-        "bucket", "seg").parquet(f"{path}/reps_compact_tmp")
-    swap_dir(spark, f"{path}/reps_compact_tmp", f"{path}/reps")
+    """Fold the remap log into the base mapping
+    (``compact_component_store``)."""
     return compact_component_store(spark, f"{path}/cc",
                                    exclude_segs=exclude_segs)
-
-
-def _final_reps(
-    spark: SparkSession,
-    path: str,
-    roots: set,
-    exclude_segs: tuple[str, ...] = (),
-) -> dict:
-    """Final representative per asked-for root — ``{input_root: rep}``
-    for a DRIVER-SIDE root key set (∝ one update's touched components,
-    by construction of the callers), under the store state with
-    ``exclude_segs`` removed. Each input root is resolved through the
-    (excluded-state) remap log, the rep log is read bucket-pruned to
-    the resolved roots plus their remap preimages, and the argmin is
-    mapped back to the input keys. Roots with no candidates under the
-    asked-for state (e.g. a post-merge root that did not exist before
-    the merge) are simply absent from the result."""
-    from nous_spark.operators.graph_inc import _flatten_remap, _read_remap
-
-    if not roots:
-        return {}
-    meta = spark.read.parquet(f"{path}/cc/meta").collect()[0]
-    flat = dict(_flatten_remap(_read_remap(
-        spark, path + "/cc", meta.id_type, exclude_segs=exclude_segs)))
-    resolved = {r: flat.get(r, r) for r in roots}
-    targets = set(resolved.values())
-    keys = targets | {old for old, new in flat.items() if new in targets}
-    kdf = local_df(spark, [(k,) for k in sorted(keys)],
-                   schema=f"root {meta.id_type}")
-    bks = [r.b for r in kdf.select(
-        F.pmod(F.xxhash64("root"),
-               F.lit(meta.buckets)).alias("b")).distinct().collect()]
-    reps = spark.read.schema(
-        f"root {meta.id_type}, rep {meta.id_type}, "
-        "bucket BIGINT, seg STRING"
-    ).parquet(f"{path}/reps").filter(F.col("bucket").isin(bks))
-    if exclude_segs:
-        reps = reps.filter(~F.col("seg").isin(*exclude_segs))
-    reps = reps.join(F.broadcast(kdf), "root")
-    if flat:
-        rmap = local_df(spark, sorted(flat.items()),
-                        schema=f"root {meta.id_type}, __new {meta.id_type}")
-        reps = (
-            reps.join(F.broadcast(rmap), "root", "left")
-            .withColumn("root", F.coalesce("__new", "root"))
-            .drop("__new")
-        )
-    by_root = {
-        r.root: r.rep for r in reps.groupBy("root")
-        .agg(F.min(_rep_struct("rep"))["label"].alias("rep")).collect()
-    }
-    return {r: by_root[t] for r, t in resolved.items() if t in by_root}
 
 
 def rep_changes(spark: SparkSession, path: str, update_id: int) -> dict:
     """``{superseded_rep: new_rep}`` caused by update ``u<update_id>`` —
     one entry per REPRESENTATIVE the update dethroned, never per
-    component member. The touched-root set is read from the update's
-    own remap and rep-log segments (both ∝ delta), the before/after
-    reps come from ``_final_reps`` with/without the segment excluded,
-    and the rep rule's monotonicity (candidate sets only grow, the
-    argmin only improves under the (length desc, label asc) total
-    order) guarantees a label appears as a key at most once across the
-    store's lifetime — so patch logs from successive updates
-    path-compress into a single consistent chain."""
-    from nous_spark.operators.graph_inc import _fs_exists
+    component member: the decoded remap segment ``u<update_id>``.
 
-    seg = f"u{update_id}"
-    meta = spark.read.parquet(f"{path}/cc/meta").collect()[0]
-    touched: set = set()
-    if _fs_exists(spark, f"{path}/cc/remap"):
-        for r in spark.read.schema(
-            f"component {meta.id_type}, new_component {meta.id_type}, "
-            "seg STRING"
-        ).parquet(f"{path}/cc/remap").filter(F.col("seg") == seg).collect():
-            touched.add(r.component)
-            touched.add(r.new_component)
-    for r in spark.read.schema(
-        f"root {meta.id_type}, rep {meta.id_type}, "
-        "bucket BIGINT, seg STRING"
-    ).parquet(f"{path}/reps").filter(F.col("seg") == seg).collect():
-        touched.add(r.root)
-    before = _final_reps(spark, path, touched, exclude_segs=(seg,))
-    after = _final_reps(spark, path, touched)
-    out = {}
-    for r in touched:
-        o, n = before.get(r), after.get(r)
-        if o is not None and n is not None and o != n:
-            out[o] = n
-    return out
+    Why the remap segment is exactly the dethroned-rep set: roots are
+    representatives (min key = best label). The update logs
+    ``old -> new`` only for an ``old`` that was a root before the
+    update and no longer is one after it, i.e. a rep that lost its
+    component to a better key (a merge or a longer arriving label);
+    ``new`` is the component's root, i.e. its rep, after the update.
+    Conversely a rep that loses its component is a root of a touched
+    component, so the update's contracted run remaps it and logs it.
+    Reps only improve under the key order, so a label is logged as an
+    ``old`` at most once in the store's lifetime — patch logs from
+    successive updates path-compress into one consistent chain."""
+    if not _fs_exists(spark, f"{path}/cc/remap"):
+        return {}
+    rows = (
+        spark.read.schema(
+            "component STRING, new_component STRING, seg STRING")
+        .parquet(f"{path}/cc/remap")
+        .filter(F.col("seg") == f"u{update_id}")
+        .select(_label("component").alias("old"),
+                _label("new_component").alias("new"))
+        .collect()
+    )
+    return {r.old: r.new for r in rows}

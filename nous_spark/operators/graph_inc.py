@@ -21,7 +21,10 @@ path got with the persisted MinHash index (operators/dedup.py:798):
   bucket plus an LSM-style remap log, so an update WRITES only its own
   delta segment and a tiny remap delta, and a probe READS only the
   buckets its ids hash to. The corpus-sized base mapping is rewritten
-  only at compaction, off the query path.
+  only at compaction, off the query path. The canonical store
+  (operators/canonicalize.py) is this store over rep-order label keys:
+  its min root is the canonical representative and its remap log is
+  the log of dethroned representatives.
 - ``streaming/structured.streaming_component_ingest`` — the streaming
   twin: alias edges arrive as microbatches, each folded with the same
   keyed-overwrite idempotency contract as the dedup/IVF twins.
@@ -77,6 +80,56 @@ def _apply_remap(mapping: DataFrame, remap_rows,
     )
 
 
+def _delta(new_edges: DataFrame, src: str, dst: str):
+    """(x, y) self-loop-free delta edges and their distinct ``id``
+    endpoints."""
+    e = (
+        new_edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
+        .filter(F.col("x") != F.col("y"))
+    )
+    verts = (
+        e.select(F.col("x").alias("id"))
+        .unionAll(e.select(F.col("y").alias("id")))
+        .distinct()
+    )
+    return e, verts
+
+
+def _contract(e: DataFrame, verts: DataFrame, mapping: DataFrame):
+    """The delta contraction shared by ``update_components`` and
+    ``update_component_store``. Returns ``(roots, remap_rows)``:
+
+    - ``roots`` (id, root): each delta endpoint's current root in the
+      (id, component) ``mapping``, itself when absent;
+    - ``remap_rows``: (root, merged min root) for every root that
+      connected components over the delta contracted to root-root
+      edges moves — at most one node per distinct delta endpoint, so
+      the inner run never sees the corpus."""
+    roots = (
+        verts.join(mapping, "id", "left")
+        .select("id", F.coalesce("component", "id").alias("root"))
+        .localCheckpoint(eager=True)
+    )
+    contracted = (
+        e.join(roots.withColumnRenamed("id", "x")
+               .withColumnRenamed("root", "rx"), "x")
+        .join(roots.withColumnRenamed("id", "y")
+              .withColumnRenamed("root", "ry"), "y")
+        .select("rx", "ry")
+        .filter(F.col("rx") != F.col("ry"))
+        .dropDuplicates(["rx", "ry"])
+        .localCheckpoint(eager=True)  # feeds isEmpty + the CC run
+    )
+    if contracted.isEmpty():
+        return roots, []
+    cc_small = connected_components(contracted, "rx", "ry")
+    # Arrow collect: a bulk delta's merge set is root-count-sized (1.5M
+    # rows on an initial load) — Row-object collect() measured ~10 s
+    # there, toPandas ~1 s
+    rm = cc_small.filter(F.col("id") != F.col("component")).toPandas()
+    return roots, list(zip(rm["id"].tolist(), rm["component"].tolist()))
+
+
 def update_components(
     mapping: DataFrame,
     new_edges: DataFrame,
@@ -106,40 +159,8 @@ def update_components(
     id below the old root correctly becomes the new root (min-root
     invariant, see module docstring).
     """
-    e = (
-        new_edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-    )
-    verts = (
-        e.select(F.col("x").alias("id"))
-        .unionAll(e.select(F.col("y").alias("id")))
-        .distinct()
-    )
-    roots = (
-        verts.join(mapping, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("root"))
-        .localCheckpoint(eager=True)
-    )
-    contracted = (
-        e.join(roots.withColumnRenamed("id", "x")
-               .withColumnRenamed("root", "rx"), "x")
-        .join(roots.withColumnRenamed("id", "y")
-              .withColumnRenamed("root", "ry"), "y")
-        .select("rx", "ry")
-        .filter(F.col("rx") != F.col("ry"))
-        .dropDuplicates(["rx", "ry"])
-        .localCheckpoint(eager=True)  # feeds isEmpty + the CC run
-    )
-    if contracted.isEmpty():
-        remap_rows: list = []
-        cc_small = None
-    else:
-        cc_small = connected_components(contracted, "rx", "ry")
-        # Arrow collect: a bulk delta's merge set is root-count-sized
-        # (1.5M rows on an initial load) — Row-object collect() measured
-        # ~10 s there, toPandas ~1 s
-        rm = cc_small.filter(F.col("id") != F.col("component")).toPandas()
-        remap_rows = list(zip(rm["id"].tolist(), rm["component"].tolist()))
+    e, verts = _delta(new_edges, src, dst)
+    roots, remap_rows = _contract(e, verts, mapping)
     if stats is not None:
         stats["touched_roots"] = roots.count()
         stats["merged_roots"] = len(remap_rows)
@@ -317,16 +338,8 @@ def update_component_store(
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
     seg = f"u{update_id}"
 
-    e = (
-        new_edges.select(F.col(src).alias("x"), F.col(dst).alias("y"))
-        .filter(F.col("x") != F.col("y"))
-    )
-    verts = (
-        e.select(F.col("x").alias("id"))
-        .unionAll(e.select(F.col("y").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e, verts = _delta(new_edges, src, dst)
+    verts = verts.localCheckpoint(eager=True)
     looked_up = _mapping_with_prune(
         spark, path, meta.buckets, meta.id_type, verts,
         exclude_segs=(seg,)
@@ -375,29 +388,7 @@ def update_component_store(
             "new_vertices": n_new,
         }
     looked_up = _apply_remap(looked_up, prior_remap)
-    roots = (
-        verts.join(looked_up, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("root"))
-        .localCheckpoint(eager=True)
-    )
-    contracted = (
-        e.join(roots.withColumnRenamed("id", "x")
-               .withColumnRenamed("root", "rx"), "x")
-        .join(roots.withColumnRenamed("id", "y")
-              .withColumnRenamed("root", "ry"), "y")
-        .select("rx", "ry")
-        .filter(F.col("rx") != F.col("ry"))
-        .dropDuplicates(["rx", "ry"])
-        .localCheckpoint(eager=True)  # feeds isEmpty + the CC run
-    )
-    if contracted.isEmpty():
-        remap_rows: list = []
-    else:
-        cc_small = connected_components(contracted, "rx", "ry")
-        # Arrow collect — see update_components: Row-object collect()
-        # costs ~10 s on a bulk batch's 1.5M-row merge set
-        rm = cc_small.filter(F.col("id") != F.col("component")).toPandas()
-        remap_rows = list(zip(rm["id"].tolist(), rm["component"].tolist()))
+    roots, remap_rows = _contract(e, verts, looked_up)
 
     # remap delta: only entries whose OLD root predates this update —
     # a new vertex that merges is written directly with its final

@@ -13,16 +13,19 @@ table itself incremental, completing the extract → link → canonicalize
   ``seg=base`` from the build/compaction, ``seg=u<k>`` per update.
   Each segment's rows are canonical AS OF ITS WRITE; segments are
   never edited afterwards.
-- ``{path}/patches`` — the rep-supersession log: when an update's
-  alias delta merges components or crowns a longer label,
-  ``canonicalize.rep_changes`` emits one ``(old_rep -> new_rep)`` row
-  per DETHRONED REPRESENTATIVE — bounded by components touched, never
-  by their member or triple counts. Readers fold the (path-compressed,
-  broadcast) patch chain over subj/obj; a merge therefore costs one
-  tiny log write, not a corpus rewrite. The rep rule's monotonicity
-  (see ``rep_changes``) makes the chain acyclic and each key
-  single-writer, so logs from any number of updates compose.
-- ``{path}/canon`` — the canonical store the above derives from.
+- ``{path}/patches`` — (old, new) label strings, one row per
+  DETHRONED REPRESENTATIVE: when an update's alias delta merges
+  components or crowns a longer label, ``canonicalize.rep_changes``
+  returns the canonical store's remap segment for that update, decoded
+  to labels — bounded by components touched, never by their member or
+  triple counts. Readers fold the (path-compressed, broadcast) patch
+  chain over subj/obj; a merge therefore costs one tiny log write, not
+  a corpus rewrite. Reps only improve (see ``rep_changes``), so the
+  chain is acyclic and each key single-writer, and logs from any
+  number of updates compose.
+- ``{path}/canon`` — the canonical store the above derives from: a
+  component store over rep-order label keys, whose roots are the
+  representatives.
 
 Idempotency: every update's writes are keyed by ``seg``/``batch``
 partition with dynamic overwrite, and the rewrite/patch computation
@@ -44,12 +47,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nous_spark.localrel import local_df
 from nous_spark.operators.canonicalize import (
     build_canonical_store,
     rep_changes,
     resolve_canonical_store,
     rewrite_triples,
     update_canonical_store,
+)
+from nous_spark.operators.graph_inc import (
+    _apply_remap,
+    _fs_delete,
+    _fs_exists,
+    swap_dir,
 )
 
 DEFAULT_SALT_BUCKETS = 16
@@ -115,14 +125,10 @@ def update_triple_store(
     cpath = f"{path}/canon"
     stats = update_canonical_store(spark, alias_delta, cpath, update_id)
     patches = rep_changes(spark, cpath, update_id)
-    meta = spark.read.parquet(f"{cpath}/cc/meta").collect()[0]
     if patches:
-        from nous_spark.localrel import local_df
-
         (
-            local_df(
-                spark, sorted(patches.items()),
-                schema=f"old {meta.id_type}, new {meta.id_type}")
+            local_df(spark, sorted(patches.items()),
+                     schema="old STRING, new STRING")
             .withColumn("seg", F.lit(seg))
             .coalesce(1)
             .write.mode("overwrite")
@@ -139,24 +145,6 @@ def update_triple_store(
     _write_segment(rewrite_triples(new_triples, mapping), path, seg,
                    salt_buckets, dynamic=True)
     return {**stats, "n_patches": len(patches)}
-
-
-def _patch_map(spark: SparkSession, path: str,
-               exclude_segs: tuple[str, ...]) -> list[tuple]:
-    from nous_spark.operators.graph_inc import (
-        _flatten_remap,
-        _fs_exists,
-    )
-
-    if not _fs_exists(spark, f"{path}/patches"):
-        return []
-    meta = spark.read.parquet(f"{path}/canon/cc/meta").collect()[0]
-    p = spark.read.schema(
-        f"old {meta.id_type}, new {meta.id_type}, seg STRING"
-    ).parquet(f"{path}/patches")
-    if exclude_segs:
-        p = p.filter(~F.col("seg").isin(*exclude_segs))
-    return _flatten_remap([(r.old, r.new) for r in p.collect()])
 
 
 def read_triple_store(
@@ -176,21 +164,14 @@ def read_triple_store(
         t = t.filter(F.col("pred").isin(*preds))
     cols = [c for c in t.columns if c not in ("seg", "salt")]
     t = t.select(cols)
-    flat = _patch_map(spark, path, exclude_segs)
-    if not flat:
+    if not _fs_exists(spark, f"{path}/patches"):
         return t
-    from nous_spark.localrel import local_df
-
-    typ = dict(t.dtypes)["subj"]
-    rmap = local_df(spark, flat, schema=f"old {typ}, new {typ}")
-    for col in ("subj", "obj"):
-        m = F.broadcast(rmap.select(F.col("old").alias(col),
-                                    F.col("new").alias(f"__p_{col}")))
-        t = (
-            t.join(m, col, "left")
-            .withColumn(col, F.coalesce(f"__p_{col}", F.col(col)))
-            .drop(f"__p_{col}")
-        )
+    p = spark.read.schema("old STRING, new STRING, seg STRING").parquet(
+        f"{path}/patches")
+    if exclude_segs:
+        p = p.filter(~F.col("seg").isin(*exclude_segs))
+    rows = [(r.old, r.new) for r in p.collect()]
+    t = _apply_remap(_apply_remap(t, rows, "subj"), rows, "obj")
     return t.select(cols)
 
 
@@ -221,8 +202,6 @@ def compact_triple_store(
         .write.mode("overwrite").partitionBy("pred", "seg")
         .parquet(f"{path}/triples_compact_tmp")
     )
-    from nous_spark.operators.graph_inc import _fs_delete, swap_dir
-
     swap_dir(spark, f"{path}/triples_compact_tmp", f"{path}/triples")
     _fs_delete(spark, f"{path}/patches")
     n_files_after = len(spark.read.parquet(f"{path}/triples").inputFiles())

@@ -64,20 +64,23 @@ class StateStore:
         stage: str,
         batch_id: int,
         compute: "callable[[], DataFrame]",
-        rows_in: int | None = None,
+        rows_in: "callable[[], int] | None" = None,
         sha_check: "callable[[DataFrame], bool] | None" = None,
         partition_cols: list[str] | None = None,
     ) -> DataFrame:
         """Execute a stage with checkpoint + lineage, or skip if done.
 
         ``compute`` is only invoked when work is needed (resume skips it
-        entirely — no recompute, no lineage rewrite). ``sha_check``
+        entirely — no recompute, no lineage rewrite). ``rows_in`` is a
+        zero-arg callable (e.g. ``df.count``) for the same reason: a
+        skipped stage never runs its input count. ``sha_check``
         receives the *written-and-read-back* output so the invariant is
         verified against what is actually on disk.
         """
         if self.is_done(stage, batch_id):
             return self.read_stage(stage, batch_id)
 
+        n_in = rows_in() if rows_in is not None else -1
         t0 = time.perf_counter()
         df = compute()
         writer = df.write.mode("overwrite")
@@ -97,7 +100,7 @@ class StateStore:
             F.lit(stage).alias("stage"),
             F.lit(batch_id).cast("int").alias("batch_id"),
             F.col("partition_id").cast("int"),
-            F.lit(rows_in if rows_in is not None else -1).cast("long").alias("rows_in"),
+            F.lit(n_in).cast("long").alias("rows_in"),
             F.col("rows_out").cast("long"),
             F.lit(sha_ok).alias("sha_ok"),
             F.lit(wall_ms).alias("wall_ms"),

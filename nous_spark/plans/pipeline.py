@@ -107,14 +107,14 @@ def run_pipeline(
             lambda batch=batch: batch.select(
                 "doc_id", "repo", "path", "commit", "lang", "content_sha"
             ),
-            rows_in=batch.count(),
+            rows_in=batch.count,
             sha_check=_docs_sha_check(source_sha),
         )
         triples = store.run_stage(
             "extract",
             b,
             lambda batch=batch: extract_triples_normalized(batch, fancy=fancy)[0],
-            rows_in=docs_b.count(),
+            rows_in=docs_b.count,
             sha_check=_triples_doc_check(docs_b),
         )
         if link:
@@ -136,7 +136,7 @@ def run_pipeline(
                     mentions, kg,
                     candidate_types=["FUNCTION", "CLASS", "MODULE"],
                 ),
-                rows_in=mentions.count(),
+                rows_in=mentions.count,
             )
 
     # -------- stage 3 global: canonicalize
@@ -149,7 +149,7 @@ def run_pipeline(
         return canon
 
     canon = store.run_stage(
-        "canonicalize", 0, _canon, rows_in=all_triples.count(),
+        "canonicalize", 0, _canon, rows_in=all_triples.count,
         sha_check=_triples_doc_check(all_docs),
     )
 
@@ -161,7 +161,7 @@ def run_pipeline(
 
     final = store.run_stage(
         "materialize", 0, _materialize,
-        rows_in=canon.count(),
+        rows_in=canon.count,
         sha_check=_triples_doc_check(all_docs),
         partition_cols=["pred"],
     )

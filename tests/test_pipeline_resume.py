@@ -35,11 +35,19 @@ def test_run_stage_skips_done(spark, tmp_path):
         calls["n"] += 1
         return spark.createDataFrame([(1, "a")], ["id", "v"])
 
-    out1 = store.run_stage("s1", 0, compute, rows_in=1)
-    assert calls["n"] == 1 and out1.count() == 1
-    out2 = store.run_stage("s1", 0, compute, rows_in=1)
+    counts = {"n": 0}
+
+    def rows_in():
+        counts["n"] += 1
+        return 1
+
+    out1 = store.run_stage("s1", 0, compute, rows_in=rows_in)
+    assert calls["n"] == 1 and counts["n"] == 1 and out1.count() == 1
+    out2 = store.run_stage("s1", 0, compute, rows_in=rows_in)
     assert calls["n"] == 1, "resume must not recompute a done stage"
+    assert counts["n"] == 1, "resume must not count a done stage's input"
     assert out2.count() == 1
+    assert [r.rows_in for r in store.lineage().collect()] == [1]
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
@@ -80,12 +88,12 @@ def test_kill_and_resume_identical(spark, tmp_path):
         "docs", 0,
         lambda: batch0.select("doc_id", "repo", "path", "commit", "lang",
                               "content_sha"),
-        rows_in=batch0.count(),
+        rows_in=batch0.count,
     )
     store.run_stage(
         "extract", 0,
         lambda: extract_triples_normalized(batch0)[0],
-        rows_in=batch0.count(),
+        rows_in=batch0.count,
     )
     assert store.is_done("extract", 0) and not store.is_done("extract", 1)
 
@@ -109,7 +117,7 @@ def test_sha_invariant_violation_raises(spark, tmp_path):
     from nous_spark.plans.pipeline import _docs_sha_check
 
     with pytest.raises(RuntimeError, match="sha256 invariant"):
-        store.run_stage("corrupt", 0, corrupt, rows_in=5,
+        store.run_stage("corrupt", 0, corrupt, rows_in=lambda: 5,
                         sha_check=_docs_sha_check(src_sha))
 
 
@@ -122,4 +130,4 @@ def test_orphan_doc_id_detected(spark, tmp_path):
         return spark.createDataFrame([(1, "a"), (999, "b")], ["doc_id", "subj"])
 
     with pytest.raises(RuntimeError, match="sha256 invariant"):
-        store.run_stage("t", 0, bad, rows_in=2, sha_check=_triples_doc_check(docs))
+        store.run_stage("t", 0, bad, rows_in=lambda: 2, sha_check=_triples_doc_check(docs))

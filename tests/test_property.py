@@ -415,3 +415,54 @@ def test_funnel_matches_python_oracle(spark, events):
             counts[si] += 1
     want = {(i, steps[i - 1]): counts[i] for i in counts}
     assert got == want
+
+
+# labels that stress the canonical store's rep-order key: the empty
+# label, multibyte characters (precomposed and combining é, CJK, an
+# astral emoji), equal-length ties and prefixes of one another
+_LABEL = st.sampled_from(
+    ["", "a", "b", "ab", "ba", "abc", "\u00e9", "e\u0301", "a\u00e9",
+     "日", "日本", "a日本", "\U0001f600", "a\U0001f600", "zz"])
+_ALIAS_EDGES = st.lists(
+    st.tuples(_LABEL, _LABEL).filter(lambda t: t[0] != t[1]), max_size=6)
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_ALIAS_EDGES.filter(bool), _ALIAS_EDGES, _ALIAS_EDGES, st.booleans())
+def test_canonical_store_matches_batch_through_two_updates(
+        spark, tmp_path_factory, base, d1, d2, compact):
+    from nous_spark.operators.canonicalize import (
+        build_canonical_store,
+        canonical_mapping,
+        compact_canonical_store,
+        rep_changes,
+        resolve_canonical_store,
+        update_canonical_store,
+    )
+
+    def frame(edges):
+        return spark.createDataFrame(edges, "a STRING, b STRING")
+
+    def batch(edges):
+        return sorted(tuple(r) for r in canonical_mapping(frame(edges))
+                      .select("label", "canonical_label", "canonical_id")
+                      .collect())
+
+    path = str(tmp_path_factory.mktemp("canon") / "store")
+    build_canonical_store(frame(base), path, buckets=4)
+    update_canonical_store(spark, frame(d1), path, update_id=1)
+    if compact:
+        compact_canonical_store(spark, path)
+    update_canonical_store(spark, frame(d2), path, update_id=2)
+
+    after = batch(base + d1 + d2)
+    got = sorted(tuple(r) for r in resolve_canonical_store(spark, path)
+                 .select("label", "canonical_label", "canonical_id")
+                 .collect())
+    assert got == after
+    # update 2's patch set: every rep it dethroned, to its new rep
+    rep_before = {rep for _, rep, _ in batch(base + d1)}
+    rep_after = {label: rep for label, rep, _ in after}
+    assert rep_changes(spark, path, 2) == {
+        r: rep_after[r] for r in rep_before if rep_after[r] != r}
