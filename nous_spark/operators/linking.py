@@ -15,18 +15,25 @@ Set-based re-design of the reference's per-document driver loop:
                                        generation")
   3. neighborhood features (J3)      — one aggregation join for ALL
                                        candidates of ALL docs at once
-  4. scoring + collective inference  — applyInPandas per doc_id: the exact
-     (A7-A9, W3)                       reference formulas + the
+  4. scoring + collective inference  — one NumPy kernel per doc_id
+     (A7-A9, W3)                       (``_solve_doc``): the exact
+                                       reference formulas + the
                                        λ(I−(1−λ)T)⁻¹e solve (EvidenceProp
-                                       .scala:107-118) in NumPy; thousands
-                                       of independent tiny problems
+                                       .scala:107-118); thousands of
+                                       independent tiny problems
   5. unmatched mentions → "nous: X" entities (colEntityDisambiguation
      .scala:101-109,186-192)
+
+Up to ``_LINK_DRIVER_CAP`` KG triples, steps 1-5 run on the driver over
+two Arrow collects (``_link_driver``); above it, or when a hub token
+needs the JVM-side hash-sample, steps 1-3 are join plans and step 4 is
+``applyInPandas``. Both paths call the same kernel.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -81,14 +88,27 @@ def vertices_with_alias(kg_triples: DataFrame) -> DataFrame:
     )
 
 
-_TOKEN_SPLIT = r"[\s_,$/:.()\[\]]+"
+# Java's \s is ASCII-only, so the whitespace class is spelled out: Spark's
+# split and the driver path's re.split then cut the same tokens
+_TOKEN_SPLIT = r"[ \t\n\x0b\f\r_,$/:.()\[\]]+"
+_MAX_CANDIDATES_PER_TOKEN = 2000
+
+# KG triple count at or under which link_entities runs on the driver
+# (``_link_driver``): two Arrow collects and single-threaded Python in
+# place of ~50 small join, broadcast and pandas-UDF jobs. Sized at the
+# warm crossover measured by scripts/linking_bench.py (4 cores, best of
+# 3 repeated calls): 8.5k triples 1.03 s driver vs 1.94 s distributed,
+# 17.6k 1.51 vs 1.70 s, 34.3k 2.39 vs 2.03 s, 68.9k 3.30 vs 1.65 s. A
+# first call in a fresh JVM favours the driver at every size measured
+# (137.6k triples: 9.0 vs 18.7 s), so the cap errs on the warm side.
+_LINK_DRIVER_CAP = 25_000
 
 
 def candidate_pairs(
     mentions: DataFrame,
     entities: DataFrame,
     phrase_match_threshold: float = 0.7,
-    max_candidates_per_token: int = 2000,
+    max_candidates_per_token: int = _MAX_CANDIDATES_PER_TOKEN,
     sim_mode: str = "stringsim",
     max_candidates_per_mention: int | None = None,
 ) -> DataFrame:
@@ -435,13 +455,21 @@ def semantic_relatedness_pairs(
     )
 
 
-_LINK_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("mention", T.StringType()),
-    T.StructField("entity_id", T.LongType()),
-    T.StructField("entity_label", T.StringType()),
-    T.StructField("score", T.DoubleType()),
-])
+_LINK_DDL = ("doc_id string, mention string, entity_id bigint, "
+             "entity_label string, score double")
+_LINK_COLS = [f.split()[0] for f in _LINK_DDL.split(", ")]
+
+
+@lru_cache(maxsize=1 << 16)
+def _phrase_match(label: str, mention: str, threshold: float) -> bool:
+    """A8's matcher: does a neighbour label match a context mention.
+    Labels and mentions repeat across the docs one process solves (the
+    driver path's whole batch, a Python worker's run of groups), so the
+    decision is memoized across calls, not per doc."""
+    from nous_spark.functions.similarity import string_sim
+
+    return string_sim(label, mention, threshold,
+                      decision_only=True) > threshold
 
 
 def _solve_doc(pdf: pd.DataFrame, lam: float, phrase_threshold: float,
@@ -449,119 +477,219 @@ def _solve_doc(pdf: pd.DataFrame, lam: float, phrase_threshold: float,
     """Per-document referent-graph inference — exact reference math:
     scores (CollectiveEntityDisScores.scala:103-147), normalized referent
     graph (ReferentGraph.scala:9-83), solve + argmax
-    (EvidenceProp.scala:36-50,107-118)."""
+    (EvidenceProp.scala:36-50,107-118).
+
+    One NumPy kernel over the doc's candidate rows (doc_id, mention,
+    entity_id, entity_label, nbr_labels, evidence_wt), shared by the
+    driver and the distributed path. Mentions, entities and neighbour
+    labels are indexed in sorted order, so the output is a function of
+    the row set, never of the row order Spark's shuffle delivers:
+      - A8: a label × mention StringSim match matrix; the entity ×
+        mention product counts, per candidate, the context mentions its
+        neighbourhood matches;
+      - A9: entity × label incidence products give |A∩B| for every pair
+        of kept entities; a pair is an edge when its entities are
+        candidates of two different mentions (mention-pair mask
+        Pᵀ·triu(1)·P). Both orientations of a pair add their edge to the
+        source's total, and a self-pair counts twice — the edge multiset
+        of the reference's per-pair loop;
+      - W3: within 1e-9 relative of a mention's best score, the smallest
+        entity_id wins (float noise never picks the entity).
+    A mention whose candidates all score under
+    ``mention_entity_threshold`` gets no row (the caller mints it
+    ``nous: <mention>``)."""
     import numpy as np
 
-    from nous_spark.functions.similarity import string_sim
-
-    doc_id = pdf["doc_id"].iloc[0]
-    mentions = sorted(pdf["mention"].unique())
-    m_index = {m: i for i, m in enumerate(mentions)}
+    mentions, mi = np.unique(pdf["mention"].to_numpy(), return_inverse=True)
+    ents, first, ei = np.unique(pdf["entity_id"].to_numpy(), return_index=True,
+                                return_inverse=True)
     n_m = len(mentions)
-    evid = dict(zip(pdf["mention"], pdf["evidence_wt"]))
-
-    # neighborhood labels repeat massively across candidates of one doc —
-    # memoize the (label, mention) decision instead of re-running the
-    # Levenshtein merge per candidate
-    _sim_cache: dict[tuple[str, str], bool] = {}
-
-    def _matches(nl: str, cm: str) -> bool:
-        key = (nl, cm)
-        hit = _sim_cache.get(key)
-        if hit is None:
-            hit = string_sim(nl, cm, phrase_threshold,
-                             decision_only=True) > phrase_threshold
-            _sim_cache[key] = hit
-        return hit
-
-    # candidate set per mention; neighborhood per entity
-    ent_info: dict[int, tuple[str, list[str]]] = {}
-    cand: dict[str, list[tuple[int, float]]] = {m: [] for m in mentions}
-    for r in pdf.itertuples(index=False):
-        nbrs = list(r.nbr_labels) if r.nbr_labels is not None else []
-        ent_info[r.entity_id] = (r.entity_label, nbrs)
-        cand[r.mention].append((r.entity_id, r.name_sim))
+    nbr_sets = [set(x) if x is not None else set()
+                for x in pdf["nbr_labels"].to_numpy()[first]]
+    labels = sorted(set().union(*nbr_sets))
+    l_index = {nl: i for i, nl in enumerate(labels)}
+    inc = np.zeros((len(ents), len(labels)))  # entity × neighbour label
+    for k, s in enumerate(nbr_sets):
+        inc[k, [l_index[nl] for nl in s]] = 1.0
+    size = inc.sum(1)
 
     # A7+A8 combined mention→entity score (getMentionEntityScore)
-    ment_ent_score: dict[tuple[str, int], float] = {}
-    for m in mentions:
-        ctx = [x for x in mentions if x != m]
-        total_nbrs = sum(len(ent_info[eid][1]) for eid, _ in cand[m])
-        for eid, _ in cand[m]:
-            nbrs = ent_info[eid][1]
-            common = 0
-            for cm in ctx:
-                if any(_matches(nl, cm) for nl in nbrs):
-                    common += 1
-            denom = max(len(ctx) * len(nbrs), 1)
-            sim = 2.0 * common / denom
-            pop = len(nbrs) / max(total_nbrs, 1)
-            score = 0.5 * pop + 0.5 * sim
-            if score >= mention_entity_threshold:
-                ment_ent_score[(m, eid)] = score
+    match = np.array(
+        [[_phrase_match(nl, cm, phrase_threshold) for cm in mentions]
+         for nl in labels],
+        dtype=float,
+    ).reshape(len(labels), n_m)
+    hit = (inc @ match) > 0  # entity × context mention
+    common = hit[ei].sum(1) - hit[ei, mi]
+    sim = 2.0 * common / np.maximum((n_m - 1) * size[ei], 1)
+    total_nbrs = np.bincount(mi, weights=size[ei], minlength=n_m)
+    pop = size[ei] / np.maximum(total_nbrs[mi], 1)
+    score = 0.5 * pop + 0.5 * sim
+    keep = score >= mention_entity_threshold
+    if not keep.any():
+        return pd.DataFrame(columns=_LINK_COLS)
 
-    kept_entities = sorted({eid for (_, eid) in ment_ent_score})
-    e_index = {e: n_m + i for i, e in enumerate(kept_entities)}
-    n = n_m + len(kept_entities)
-    if not kept_entities:
-        return pd.DataFrame(columns=[f.name for f in _LINK_SCHEMA.fields])
+    kept, ki = np.unique(ei[keep], return_inverse=True)
+    n = n_m + len(kept)
+    cand = np.zeros((n_m, len(kept)))  # P: mention × kept entity
+    cand[mi[keep], ki] = 1.0
+    s_me = np.zeros((n_m, len(kept)))
+    s_me[mi[keep], ki] = score[keep]
 
     # A9 semantic relatedness between candidates of different mentions
-    sem: dict[tuple[int, int], float] = {}
-    ml = list(mentions)
-    for i in range(len(ml)):
-        for j in range(i + 1, len(ml)):
-            for e1 in [e for (mm, e) in ment_ent_score if mm == ml[i]]:
-                for e2 in [e for (mm, e) in ment_ent_score if mm == ml[j]]:
-                    n1, n2 = set(ent_info[e1][1]), set(ent_info[e2][1])
-                    if not n1 and not n2:
-                        continue
-                    common = len(n1 & n2)
-                    if common == 0:
-                        continue
-                    mx, mn = max(len(n1), len(n2)), min(len(n1), len(n2))
-                    denom = np.log(max(n_graph_vertices, 2)) - np.log(max(mn, 1))
-                    if denom <= 0:
-                        continue
-                    sr = 1 - (np.log(mx) - np.log(common)) / denom
-                    if sr > 0:
-                        sem[(e1, e2)] = sr
+    sz = size[kept]
+    inter = inc[kept] @ inc[kept].T
+    mn = np.maximum(np.minimum.outer(sz, sz), 1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        denom = np.log(max(n_graph_vertices, 2)) - np.log(mn)
+        sr = 1 - (np.log(np.maximum.outer(sz, sz)) - np.log(inter)) / denom
+    pair = cand.T @ np.triu(np.ones((n_m, n_m)), 1) @ cand > 0
+    key = pair & (inter > 0) & (denom > 0) & (sr > 0)
+    sem = np.where(key | key.T, sr, 0.0)
+    mult = key.astype(float) + key.T  # edges src→dst in the loop's multiset
 
     # referent graph: per-source normalized weights; T[dst, src] = w
-    edges: dict[int, list[tuple[int, float]]] = {}
-    for (m, eid), s in ment_ent_score.items():
-        edges.setdefault(m_index[m], []).append((e_index[eid], s))
-    for (e1, e2), s in sem.items():
-        edges.setdefault(e_index[e1], []).append((e_index[e2], s))
-        edges.setdefault(e_index[e2], []).append((e_index[e1], s))
-
-    Tm = np.zeros((n, n))
-    for src, outs in edges.items():
-        tot = sum(w for _, w in outs)
-        if tot <= 0:
-            continue
-        for dst, w in outs:
-            Tm[dst, src] = w / tot
-
+    tot_m = s_me.sum(1)
+    tot_e = (mult * sem).sum(1)
+    tm = np.zeros((n, n))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        tm[n_m:, :n_m] = np.where(tot_m[:, None] > 0, s_me / tot_m[:, None], 0.0).T
+        tm[n_m:, n_m:] = np.where(tot_e[:, None] > 0, sem / tot_e[:, None], 0.0).T
     e_vec = np.zeros((n, 1))
-    for m, i in m_index.items():
-        e_vec[i, 0] = evid.get(m, 0.0)
+    e_vec[mi, 0] = pdf["evidence_wt"].to_numpy()
 
-    r_vec = lam * np.linalg.inv(np.eye(n) - (1 - lam) * Tm) @ e_vec
+    r_vec = lam * np.linalg.inv(np.eye(n) - (1 - lam) * tm) @ e_vec
 
-    # argmax per mention of M[i, j] * r[j]  (M = T.T rows 0..n_m-1)
-    Mt = Tm.T[:n_m, :]
-    out_rows = []
-    for m, i in m_index.items():
-        best_j, best_score = -1, -np.inf
-        for j in range(n_m, n):
-            sc = Mt[i, j] * r_vec[j, 0]
-            if sc > best_score:
-                best_score, best_j = sc, j
-        if best_j >= 0:
-            eid = kept_entities[best_j - n_m]
-            out_rows.append((doc_id, m, eid, ent_info[eid][0], float(best_score)))
-    return pd.DataFrame(out_rows, columns=[f.name for f in _LINK_SCHEMA.fields])
+    # argmax per mention of M[i, j] * r[j] over its own kept candidates
+    sc = np.where(cand > 0, tm[n_m:, :n_m].T * r_vec[n_m:, 0], -np.inf)
+    best = sc.max(1)
+    pick = (sc >= (best - 1e-9 * np.abs(best))[:, None]).argmax(1)
+    rows = cand.any(1)
+    eid = ents[kept[pick[rows]]]
+    return pd.DataFrame({
+        "doc_id": pdf["doc_id"].iloc[0],
+        "mention": mentions[rows],
+        "entity_id": eid,
+        "entity_label": pdf["entity_label"].to_numpy()[first][kept[pick[rows]]],
+        "score": sc[rows, pick[rows]],
+    })
+
+
+def _link_driver(mentions: DataFrame, kg_triples: DataFrame,
+                 phrase_match_threshold: float, mention_entity_threshold: float,
+                 lam: float, candidate_types: list[str] | None,
+                 max_candidates_per_mention: int | None) -> DataFrame | None:
+    """``link_entities`` on the driver: one Arrow collect of the triples
+    and one of the mentions, then J1-J3 in Python dicts, the per-doc
+    ``_solve_doc`` and the ``nous:`` minting, handed back through
+    ``hand_back``. Every id is projected JVM-side (xxhash64 of subj, obj
+    and ``'nous: '||mention``), and tokens follow Spark's ``split`` over
+    ``lower`` with the same pattern, so rows equal the distributed
+    path's. Returns None — the caller goes distributed — when a mention
+    token blocks to more than ``_MAX_CANDIDATES_PER_TOKEN`` entities:
+    the hub hash-sample stays JVM-side."""
+    import re
+
+    from nous_spark.functions.similarity import string_sim
+    from nous_spark.localrel import hand_back
+
+    kg = kg_triples.select(
+        "subj", "pred", "obj",
+        F.xxhash64("subj").alias("sid"), F.xxhash64("obj").alias("oid"),
+    ).toPandas()
+    ment = mentions.select(
+        "doc_id", "mention", "evidence_wt",
+        F.xxhash64(F.concat(F.lit("nous: "), F.col("mention"))).alias("nous_id"),
+    ).toPandas()
+
+    # J1: vertices (label -> id) and alias names
+    subj, obj = kg["subj"].to_numpy(), kg["obj"].to_numpy()
+    sid, oid = kg["sid"].to_numpy(), kg["oid"].to_numpy()
+    vid = dict(zip(subj, sid))
+    vid.update(zip(obj, oid))
+    n_vertices = len(vid)
+    names: dict[int, set[str]] = {}
+    is_alias = kg["pred"].str.lower().isin(ALIAS_PREDICATES).to_numpy()
+    for i, a in zip(sid[is_alias], obj[is_alias]):
+        if a is not None:
+            names.setdefault(i, set()).add(a)
+    typed = None
+    if candidate_types is not None:
+        typed = set(sid[((kg["pred"] == "rdf:type")
+                         & kg["obj"].isin(candidate_types)).to_numpy()])
+    label: dict[int, str] = {}
+    for lb, i in vid.items():
+        # a null label splits to no token: never a candidate
+        if lb is None or (typed is not None and i not in typed):
+            continue
+        label[i] = lb
+        names[i] = names.get(i, set()) | {lb}
+        if typed is not None:
+            names[i].add(lb.split("::")[-1])
+
+    # J2: token blocking on the mention tokens, StringSim verify, top-C
+    split = re.compile(_TOKEN_SPLIT)
+
+    def tokens(s: str) -> set[str]:
+        return {t for t in split.split(s.lower()) if t}
+
+    m_tok = {m: tokens(m) for m in set(ment["mention"]) if m is not None}
+    wanted = set().union(*m_tok.values())
+    postings: dict[str, list[int]] = {}
+    for i in label:
+        for t in set().union(*map(tokens, names[i])) & wanted:
+            postings.setdefault(t, []).append(i)
+    if any(len(p) > _MAX_CANDIDATES_PER_TOKEN for p in postings.values()):
+        return None
+    cands: dict[str, list[int]] = {}
+    for m, toks in m_tok.items():
+        verified = []
+        for i in set().union(*(postings.get(t, ()) for t in toks)):
+            best = 0.0
+            for nm in names[i]:
+                best = max(best, string_sim(m, nm, phrase_match_threshold,
+                                            decision_only=True))
+            if best >= phrase_match_threshold:
+                verified.append((-best, i))
+        verified.sort()
+        cands[m] = [i for _, i in verified[:max_candidates_per_mention]]
+
+    # J3: one-hop neighbour label sets of the candidates, both directions
+    nbrs: dict[int, set[str]] = {i: set() for c in cands.values() for i in c}
+    for s, o, i, j in zip(subj, obj, sid, oid):
+        if i in nbrs and o is not None:
+            nbrs[i].add(o)
+        if j in nbrs and s is not None:
+            nbrs[j].add(s)
+
+    scored = pd.DataFrame(
+        [(d, m, i, label[i], list(nbrs[i]), w)
+         for d, m, w in zip(ment["doc_id"], ment["mention"], ment["evidence_wt"])
+         for i in cands.get(m, ())],
+        columns=["doc_id", "mention", "entity_id", "entity_label",
+                 "nbr_labels", "evidence_wt"],
+    )
+    solved = [
+        _solve_doc(g, lam, phrase_match_threshold, mention_entity_threshold,
+                   n_vertices)
+        for _, g in scored.groupby("doc_id", sort=False, dropna=False)
+    ]
+    linked = pd.concat([s for s in solved if len(s)]
+                       or [pd.DataFrame(columns=_LINK_COLS)])
+
+    # unmatched mentions → "nous: <mention>" (reference :101-109)
+    done = set(zip(linked["doc_id"], linked["mention"]))
+    un = ment[[(d, m) not in done
+               for d, m in zip(ment["doc_id"], ment["mention"])]]
+    return hand_back(mentions.sparkSession, {
+        "doc_id": [*linked["doc_id"], *un["doc_id"]],
+        "mention": [*linked["mention"], *un["mention"]],
+        "entity_id": [*linked["entity_id"], *un["nous_id"]],
+        "entity_label": [*linked["entity_label"],
+                         *(None if m is None else "nous: " + m
+                           for m in un["mention"])],
+        "score": [*linked["score"], *[0.0] * len(un)],
+    }, _LINK_DDL)
 
 
 def link_entities(
@@ -582,7 +710,16 @@ def link_entities(
     an rdf:type in the list (e.g. ["FUNCTION", "CLASS", "MODULE"] for code
     identifier mentions) — candidates stay typed-correct and the blocked
     join shrinks by the prose share of the KG. Neighborhood/context
-    features still use the FULL graph."""
+    features still use the FULL graph.
+
+    Path choice: up to ``_LINK_DRIVER_CAP`` KG triples the whole link
+    runs on the driver (``_link_driver``: two Arrow collects, no join
+    plan), unless a mention token blocks to more than
+    ``_MAX_CANDIDATES_PER_TOKEN`` entities — that hub fallback takes the
+    distributed plan, whose hash-sample of the hub stays JVM-side. Larger
+    KGs take the distributed plan: J1-J3 as joins and aggregations, the
+    solve as ``applyInPandas`` per doc. Both paths call the same
+    ``_solve_doc``, so they return the same rows."""
     if "evidence_wt" not in mentions.columns:
         from pyspark.sql import Window
 
@@ -591,11 +728,20 @@ def link_entities(
             "evidence_wt",
             1.0 / F.size(F.collect_set("mention").over(w)).cast("double"),
         )
-    # referenced by the candidate join, the scored join and the unmatched
-    # anti-join — persist once instead of recomputing the upstream thrice
     mentions = mentions.select(
         F.col("doc_id").cast("string").alias("doc_id"), "mention", "evidence_wt"
-    ).dropDuplicates(["doc_id", "mention"]).persist()
+    ).dropDuplicates(["doc_id", "mention"])
+    if kg_triples.count() <= _LINK_DRIVER_CAP:
+        linked = _link_driver(
+            mentions, kg_triples, phrase_match_threshold,
+            mention_entity_threshold, lam, candidate_types,
+            max_candidates_per_mention,
+        )
+        if linked is not None:
+            return linked
+    # referenced by the candidate join, the scored join and the unmatched
+    # anti-join — persist once instead of recomputing the upstream thrice
+    mentions = mentions.persist()
 
     ents = vertices_with_alias(kg_triples)
     if candidate_types is not None:
@@ -639,7 +785,7 @@ def link_entities(
         lambda pdf: _solve_doc(
             pdf, lam, phrase_match_threshold, mention_entity_threshold, n_vertices
         ),
-        schema=_LINK_SCHEMA,
+        schema=_LINK_DDL,
     ).persist()  # read twice: result union + unmatched anti-join
 
     unmatched = (

@@ -28,18 +28,19 @@ def sf_dir():
 def distributed():
     """``with distributed():`` runs the capped driver fast paths
     (connected_components, k_core, label_propagation,
-    near_duplicate_clusters, PIC) on their distributed loops instead, so
-    a test can compare both paths on the same input. A cap of -1 admits
-    no input, not even an empty one."""
+    near_duplicate_clusters, PIC, link_entities) on their distributed
+    plans instead, so a test can compare both paths on the same input. A
+    cap of -1 admits no input, not even an empty one."""
     import contextlib
 
-    from nous_spark.operators import clustering, graph
+    from nous_spark.operators import clustering, graph, linking
 
     @contextlib.contextmanager
     def force():
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(graph, "DRIVER_EDGE_CAP", -1)
             mp.setattr(clustering, "_PIC_EDGE_DRIVER_CAP", -1)
+            mp.setattr(linking, "_LINK_DRIVER_CAP", -1)
             yield
 
     return force

@@ -78,9 +78,9 @@ def test_canonical_rewrite_broadcasts_mapping(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_linking_no_cartesian(spark):
+def test_linking_no_cartesian(spark, distributed):
     """Candidate generation must stay blocked — no cartesian/nested-loop
-    joins anywhere in the linking plan."""
+    joins anywhere in the distributed linking plan."""
     from nous_spark.operators.linking import link_entities
 
     kg = spark.createDataFrame(
@@ -88,10 +88,15 @@ def test_linking_no_cartesian(spark):
         ["subj", "pred", "obj"],
     )
     mentions = spark.createDataFrame([("d1", "A"), ("d1", "B")], ["doc_id", "mention"])
-    plan = _plan(link_entities(mentions, kg))
+    with distributed():
+        plan = _plan(link_entities(mentions, kg))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "FlatMapGroupsInPandas" in plan or "FlatMapGroupsInArrow" in plan
+    # a KG this small takes the driver path: no join plan, no pandas UDF
+    plan = _plan(link_entities(mentions, kg))
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_dictionary_encode_no_global_window(spark, sf_dir):
