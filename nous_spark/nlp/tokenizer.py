@@ -11,7 +11,6 @@ the population mention detection cares about (noun runs, TripleParser.scala:122-
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 from . import lexicon as lx
 

@@ -257,28 +257,6 @@ def match_pattern(
     return out
 
 
-def match_union(
-    triples: DataFrame,
-    *alternatives: Sequence[tuple[str, str, str]],
-    subj_col: str = "subj",
-    pred_col: str = "pred",
-    obj_col: str = "obj",
-    distinct: bool = False,
-) -> DataFrame:
-    """SPARQL UNION: each alternative is its own BGP; bindings concat
-    with bag semantics, variables absent from an alternative coming
-    back NULL (``unionByName(allowMissingColumns=True)``, exactly the
-    SPARQL unbound behaviour)."""
-    if not alternatives:
-        raise ValueError("at least one alternative required")
-    out = None
-    for alt in alternatives:
-        m = match_pattern(triples, alt, subj_col, pred_col, obj_col)
-        out = m if out is None else out.unionByName(
-            m, allowMissingColumns=True)
-    return out.distinct() if distinct else out
-
-
 def path_preds(pred: str | Sequence[str]) -> list[str]:
     """The predicate names a path element set touches (``^`` prefixes
     stripped) — what a store read needs for partition pruning."""

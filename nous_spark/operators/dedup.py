@@ -10,9 +10,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# deterministic 64-bit mix constants for the minhash permutation family
-_MERSENNE = (1 << 61) - 1
-
 
 def _spread(df: DataFrame, min_parallelism: int | str = "auto") -> DataFrame:
     """Spread a below-parallelism input before expression-heavy per-doc
@@ -578,77 +575,6 @@ def duplicate_spans(
                 F.col("n_span_tokens").cast("int"),
             ),
         ).alias("span_text"),
-    )
-
-
-def strip_duplicate_spans(
-    df: DataFrame,
-    spans: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Remove repeated spans from every document EXCEPT the first
-    occurrence (min doc_id, then min span_start, per distinct span
-    text) — Lee et al.'s keep-one policy, so the corpus retains exactly
-    one copy of each boilerplate block.
-
-    The keeper choice groups on ``md5(span_text)`` (never the text
-    itself) via groupBy+join — skew-safe when one footer repeats across
-    millions of pages. Reconstruction is pure Catalyst: the drop
-    intervals are collected per doc (bounded: a doc's own spans), and a
-    2-arg ``filter`` lambda keeps tokens whose index falls outside every
-    dropped interval. Emits the original columns with ``text`` replaced
-    and ``n_stripped_tokens``."""
-    s = spans.withColumn("__sh", F.md5("span_text"))
-    keep = s.groupBy("__sh").agg(
-        F.min(F.struct(F.col(id_col), F.col("span_start"))).alias("__k")
-    )
-    drops = (
-        s.join(keep, "__sh")
-        .filter(
-            ~(
-                (F.col(id_col) == F.col("__k")[id_col])
-                & (F.col("span_start") == F.col("__k")["span_start"])
-            )
-        )
-        .groupBy(id_col)
-        .agg(
-            F.collect_list(
-                F.struct(F.col("span_start").alias("s"),
-                         F.col("span_end").alias("e"))
-            ).alias("__iv")
-        )
-    )
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
-    kept_toks = F.filter(
-        toks,
-        lambda x, i: ~F.exists(
-            "__iv", lambda iv: (i >= iv["s"]) & (i <= iv["e"])
-        ),
-    )
-    out_cols = [c for c in df.columns if c != text_col]
-    return (
-        df.join(drops, id_col, "left")
-        .select(
-            *out_cols,
-            F.when(F.col("__iv").isNull(), F.col(text_col))
-            .otherwise(F.concat_ws(" ", kept_toks))
-            .alias(text_col),
-            F.when(F.col("__iv").isNull(), F.lit(0))
-            .otherwise(
-                F.aggregate(
-                    "__iv",
-                    F.lit(0),
-                    lambda acc, iv: acc
-                    + (iv["e"] - iv["s"] + 1).cast("int"),
-                )
-            )
-            .cast("long")
-            .alias("n_stripped_tokens"),
-        )
     )
 
 

@@ -61,11 +61,6 @@ def purge_longest_object(
     ).select(df.columns)
 
 
-def dedup_triples(df: DataFrame) -> DataFrame:
-    """SO1 (ReadGraph.scala:37): distinct (subj, pred, obj)."""
-    return df.dropDuplicates(["subj", "pred", "obj"])
-
-
 def top_k_per_group(
     df: DataFrame, group_cols: list[str], order_col: str, k: int, desc: bool = True
 ) -> DataFrame:

@@ -211,19 +211,6 @@ def bin_weights(
     )
 
 
-def stratified_sample_edges(
-    edges: DataFrame, weight_col: str, fractions: dict[int, float] | None = None,
-    n_bins: int = 10, seed: int = 42,
-) -> DataFrame:
-    """G9/W6 (sampleByKey design at DatatoPatternGraph.scala:890-972,
-    binning :923-924): normalize a weight column to [0,1], bin to
-    floor(w·10), stratified-sample by bin."""
-    binned = bin_weights(edges, weight_col, n_bins, bin_col="__bin")
-    if fractions is None:
-        fractions = {b: max(0.1, (b + 1) / n_bins) for b in range(n_bins)}
-    return binned.sampleBy("__bin", fractions, seed).drop("__bin")
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",

@@ -32,7 +32,6 @@ needs the JVM-side hash-sample, steps 1-3 are join plans and step 4 is
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from functools import lru_cache
 
 import pandas as pd
@@ -108,7 +107,6 @@ def candidate_pairs(
     mentions: DataFrame,
     entities: DataFrame,
     phrase_match_threshold: float = 0.7,
-    max_candidates_per_token: int = _MAX_CANDIDATES_PER_TOKEN,
     sim_mode: str = "stringsim",
     max_candidates_per_mention: int | None = None,
 ) -> DataFrame:
@@ -118,7 +116,7 @@ def candidate_pairs(
     → (doc_id, mention, entity_id, entity_label, name_sim).
 
     Blocking: both sides explode lowercase name tokens; equi-join on token.
-    Skew guard: a token blocking to more than ``max_candidates_per_token``
+    Skew guard: a token blocking to more than ``_MAX_CANDIDATES_PER_TOKEN``
     entities (ubiquitous identifiers — every repo defines `connect`) keeps
     a deterministic hash-sample of ~cap entities instead of being dropped:
     single-token hub mentions still get candidates (dropping the token
@@ -168,11 +166,11 @@ def candidate_pairs(
     e_tok = (
         e_tok.join(tok_counts, "token")
         .filter(
-            (F.col("tc") <= max_candidates_per_token)
+            (F.col("tc") <= _MAX_CANDIDATES_PER_TOKEN)
             | (
                 F.pmod(
                     F.xxhash64("entity_id", "token"),
-                    F.ceil(F.col("tc") / F.lit(max_candidates_per_token)).cast("long"),
+                    F.ceil(F.col("tc") / F.lit(_MAX_CANDIDATES_PER_TOKEN)).cast("long"),
                 )
                 == 0
             )

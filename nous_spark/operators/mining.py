@@ -7,8 +7,8 @@ loops. Here a pattern instance is a row:
     instances(pattern_key STRING, binding ARRAY<BIGINT>, batch_id INT,
               endpoints ARRAY<BIGINT>)
 
-pattern growth is a bounded self-equi-join, support is a two-level
-aggregation, and the closed/redundant marking is a single join — no Pregel.
+pattern growth is a bounded self-equi-join and support is a two-level
+aggregation — no Pregel.
 """
 
 from __future__ import annotations
@@ -40,36 +40,9 @@ def min_image_support(instances: DataFrame, binding_cols: list[str]) -> DataFram
     return per_pos.groupBy("pattern_key").agg(F.min("n_distinct").alias("support"))
 
 
-def min_image_support_arr(instances: DataFrame) -> DataFrame:
-    """A1 for array-typed bindings: instances(pattern_key, binding ARRAY<BIGINT>)."""
-    melted = instances.select(
-        "pattern_key", F.posexplode("binding").alias("var_pos", "node")
-    )
-    per_pos = melted.groupBy("pattern_key", "var_pos").agg(
-        F.countDistinct("node").alias("n_distinct")
-    )
-    return per_pos.groupBy("pattern_key").agg(F.min("n_distinct").alias("support"))
-
-
-def split_frequent(supports: DataFrame, mis_support: int) -> tuple[DataFrame, DataFrame]:
-    """A2 (getFrequentPatterns/getInfrequentPatterns, :566-578)."""
-    freq = supports.filter(F.col("support") >= mis_support)
-    infreq = supports.filter(F.col("support") < mis_support)
-    return freq, infreq
-
-
 def cumulative_pattern_count(per_batch: DataFrame) -> DataFrame:
     """A5 (:580-588): sum supports across batches."""
     return per_batch.groupBy("pattern_key").agg(F.sum("support").alias("support"))
-
-
-def filter_frequent_instances(instances: DataFrame, frequent: DataFrame) -> DataFrame:
-    """J7 (getMISFrequentGraph :1205-1236): left-semi against the frequent
-    pattern set — small side auto-broadcast, replaces the reference's
-    explicit sc.broadcast."""
-    return instances.join(
-        F.broadcast(frequent.select("pattern_key")), "pattern_key", "left_semi"
-    )
 
 
 def grow_patterns(instances: DataFrame, cur_batch: int | None = None,
@@ -141,35 +114,3 @@ def grow_patterns(instances: DataFrame, cur_batch: int | None = None,
         ).alias("inst_id"),
     )
     return grown.dropDuplicates(["pattern_key", "binding"])
-
-
-def mark_redundant(dep_edges: DataFrame, supports: DataFrame) -> DataFrame:
-    """G4 (updateGDepStatus Pregel :600-680) as one join: a parent pattern
-    is redundant if some child (superpattern) has equal support; closed if
-    all children have strictly lower support.
-
-    dep_edges(parent_pattern_key, child_pattern_key).
-    Returns (pattern_key, is_redundant, is_closed)."""
-    ps = supports.select(
-        F.col("pattern_key").alias("parent_pattern_key"),
-        F.col("support").alias("parent_support"),
-    )
-    cs = supports.select(
-        F.col("pattern_key").alias("child_pattern_key"),
-        F.col("support").alias("child_support"),
-    )
-    j = dep_edges.join(ps, "parent_pattern_key").join(cs, "child_pattern_key")
-    return (
-        j.groupBy("parent_pattern_key")
-        .agg(
-            F.max((F.col("child_support") == F.col("parent_support")).cast("int"))
-            .alias("any_equal"),
-            F.max((F.col("child_support") >= F.col("parent_support")).cast("int"))
-            .alias("any_ge"),
-        )
-        .select(
-            F.col("parent_pattern_key").alias("pattern_key"),
-            (F.col("any_equal") == 1).alias("is_redundant"),
-            (F.col("any_equal") == 0).alias("is_closed"),
-        )
-    )

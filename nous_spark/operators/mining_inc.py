@@ -260,73 +260,20 @@ def _norm_chains(chain_patterns) -> list[tuple[str, str, str]]:
     return chains
 
 
-def _chain3_matches(e1: DataFrame, e2: DataFrame,
-                    e3: DataFrame) -> DataFrame:
-    """(x, y, z, w) bindings of ?x -p1-> ?y -p2-> ?z -p3-> ?w."""
-    return (
-        e1.select(F.col("subj").alias("x"), F.col("obj").alias("y"))
-        .join(e2.select(F.col("subj").alias("y"),
-                        F.col("obj").alias("z")), "y")
-        .join(e3.select(F.col("subj").alias("z"),
-                        F.col("obj").alias("w")), "z")
-        .select("x", "y", "z", "w")
-    )
-
-
-def _chain3_delta_terms(delta: DataFrame, prior: DataFrame | None,
-                        p1: str, p2: str, p3: str,
-                        broadcast_delta: bool) -> DataFrame:
-    """Telescoping delta rule for the 3-way chain view V = e1⋈e2⋈e3:
-    ΔV = Δ1⋈N2⋈N3 ∪ E1⋈Δ2⋈N3 ∪ E1⋈E2⋈Δ3, with E the pre-batch
-    state and N = E+Δ — term i puts the delta at hop i, OLD state
-    before it, NEW state after it, so the terms are disjoint and their
-    union is exactly the view growth (bag semantics). Scale shape: the
-    hop adjacent to each Δ is semi-filtered to the delta's junction
-    vertices (broadcast under the caller's size guard); later hops are
-    pred-partition-pruned scans whose join input is already bounded by
-    the earlier semi-filters."""
-    d1 = delta.filter(F.col("pred") == p1)
-    d2 = delta.filter(F.col("pred") == p2)
-    d3 = delta.filter(F.col("pred") == p3)
-    if prior is None:
-        return _chain3_matches(d1, d2, d3)
-    e1 = prior.filter(F.col("pred") == p1)
-    e2 = prior.filter(F.col("pred") == p2)
-    e3 = prior.filter(F.col("pred") == p3)
-    n2 = e2.unionByName(d2)
-    n3 = e3.unionByName(d3)
-
-    def _semi(edges, col, keys):
-        if broadcast_delta:
-            keys = F.broadcast(keys)
-        return edges.join(keys, edges[col] == F.col("__k"), "left_semi")
-
-    t1 = _chain3_matches(
-        d1, _semi(n2, "subj", d1.select(F.col("obj").alias("__k"))
-                  .distinct()), n3)
-    t2 = _chain3_matches(
-        _semi(e1, "obj", d2.select(F.col("subj").alias("__k"))
-              .distinct()), d2, n3)
-    e2p = _semi(e2, "obj", d3.select(F.col("subj").alias("__k"))
-                .distinct())
-    t3 = _chain3_matches(
-        _semi(e1, "obj", e2p.select(F.col("subj").alias("__k"))
-              .distinct()), e2p, d3)
-    return t1.unionByName(t2).unionByName(t3)
-
-
 def _chain3_delta_postings(delta: DataFrame, prior: DataFrame | None,
                            p1: str, p2: str, p3: str,
                            broadcast_delta: bool, key,
                            delta_preds: set | None = None):
     """Per-position node sets of the 3-chain's telescoping delta terms
-    (same term structure and semi-filters as ``_chain3_delta_terms``,
-    which ``watch``-style match consumers keep using), with each term's
-    positions computed by ``_chain3_postings_sets`` instead of a match
-    materialization. Only key sets derived DIRECTLY from the delta are
-    force-broadcast; the t3 e2p-derived set is bounded by stored-side
-    fan-in, not the delta, so it goes through a plain left_semi and AQE
-    picks broadcast when it is actually small."""
+    ΔV = Δ1⋈N2⋈N3 ∪ E1⋈Δ2⋈N3 ∪ E1⋈E2⋈Δ3, with E the pre-batch state
+    and N = E+Δ: term i puts the delta at hop i, OLD state before it,
+    NEW state after it, so the terms are disjoint and their union is
+    exactly the view growth. Each term's positions are computed by
+    ``_chain3_postings_sets`` instead of a match materialization. Only
+    key sets derived DIRECTLY from the delta are force-broadcast; the t3
+    e2p-derived set is bounded by stored-side fan-in, not the delta, so
+    it goes through a plain left_semi and AQE picks broadcast when it is
+    actually small."""
     def _has(p):
         return delta_preds is None or p in delta_preds
 

@@ -19,130 +19,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),       # image|audio|video
-    T.StructField("mime", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_ms", T.LongType(), True),
-    T.StructField("payload", T.BinaryType(), False),
-])
-
-FEATURE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("kind", T.StringType(), False),
-    T.StructField("n_bytes", T.LongType(), False),
-    T.StructField("feature", T.ArrayType(T.FloatType()), False),
-])
-
-
-def synthetic_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic media table for tests/bench with REAL decodable
-    payloads: PNG images, 16-bit PCM WAV audio, Cmono Y4M video."""
-    rows = []
-    for i in range(n):
-        rng = np.random.default_rng((seed, i))
-        kind = ["image", "audio", "video"][i % 3]
-        if kind == "image":
-            w, h = 12 + i % 9, 8 + i % 7
-            img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            payload, dur = encode_png(img), None
-        elif kind == "audio":
-            rate = 8000
-            n_fr = 400 + 40 * (i % 11)
-            x = rng.uniform(-0.8, 0.8, (n_fr, 1 + i % 2))
-            payload, dur = encode_wav(x, rate), int(1000 * n_fr / rate)
-            w = h = None
-        else:
-            nf, fh, fw = 4 + i % 5, 6 + i % 4, 8 + i % 5
-            frames = rng.integers(0, 256, (nf, fh, fw), dtype=np.uint8)
-            payload, dur = encode_y4m(frames, fps_num=10), int(1000 * nf / 10)
-            w, h = fw, fh
-        if kind == "image":
-            w, h = img.shape[1], img.shape[0]
-        mime = {"image": "image/png", "audio": "audio/wav",
-                "video": "video/x-yuv4mpeg"}[kind]
-        rows.append((i, kind, mime, w, h, dur, bytearray(payload)))
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-
-
-def _image_feature(data: bytes, dim: int) -> list[float]:
-    """Real image feature: decode, gray-convert, nearest-resize to a
-    square thumbnail of ~dim cells, L2-normalize."""
-    img = decode_png(data) if data[:8] == _PNG_MAGIC else decode_ppm(data)
-    gray = img.astype(np.float64).mean(axis=2) if img.ndim == 3 else img
-    side = max(int(round(dim ** 0.5)), 1)
-    thumb = resize_image_nearest(gray, side, side).ravel()
-    vec = np.zeros(dim)
-    vec[: thumb.size] = thumb[:dim]
-    norm = float(np.linalg.norm(vec)) or 1.0
-    return (vec / norm).tolist()
-
-
-def _audio_feature(data: bytes, dim: int) -> list[float]:
-    """Real audio feature: mono mix, log-magnitude FFT folded into dim
-    bands, L2-normalized."""
-    x, _ = decode_wav(data)
-    mono = x.mean(axis=1)
-    if mono.size == 0:
-        return [0.0] * dim
-    mag = np.abs(np.fft.rfft(mono))
-    bands = np.array_split(np.log1p(mag), dim)
-    vec = np.array([b.mean() if b.size else 0.0 for b in bands])
-    norm = float(np.linalg.norm(vec)) or 1.0
-    return (vec / norm).tolist()
-
-
-def _video_feature(data: bytes, dim: int) -> list[float]:
-    """Real video feature: per-frame mean luma resampled to dim points
-    (a temporal intensity profile), L2-normalized."""
-    frames, _, _ = decode_y4m(data)
-    if not frames:
-        return [0.0] * dim
-    prof = np.array([float(f.mean()) for f in frames])
-    idx = (np.arange(dim) * len(prof) // dim).clip(0, len(prof) - 1)
-    vec = prof[idx]
-    norm = float(np.linalg.norm(vec)) or 1.0
-    return (vec / norm).tolist()
-
-
-def extract_features(media: DataFrame, dim: int = 32) -> DataFrame:
-    """Decode + feature-extract via mapInPandas over Arrow batches of
-    binary payloads, dispatching on the ``kind`` column to the REAL
-    decoders (PNG/PPM images, WAV audio, Y4M video). Undecodable payloads
-    get decode_error and an empty feature instead of killing the job."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fns = {"image": _image_feature, "audio": _audio_feature,
-               "video": _video_feature}
-        for pdf in batches:
-            feats, errs = [], []
-            for kind, payload in zip(pdf["kind"], pdf["payload"]):
-                try:
-                    fn = fns.get(kind)
-                    if fn is None:
-                        raise ValueError(f"unknown media kind {kind!r}")
-                    feats.append(fn(bytes(payload), dim))
-                    errs.append(None)
-                except Exception as exc:  # decode failures are data
-                    feats.append([])
-                    errs.append(str(exc))
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "kind": pdf["kind"],
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "feature": feats,
-                "decode_error": errs,
-            })
-
-    schema = T.StructType(
-        FEATURE_SCHEMA.fields + [T.StructField("decode_error", T.StringType(), True)]
-    )
-    return media.mapInPandas(run, schema=schema)
 
 
 _PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -381,14 +258,6 @@ def decode_audio_stats(media: DataFrame, payload_col: str = "payload",
     return media.mapInPandas(run, schema=_AUDIO_STATS_SCHEMA)
 
 
-def resize_image_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Nearest-neighbor resize kernel (NumPy index arithmetic)."""
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-    xs = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 _Y4M_MAGIC = b"YUV4MPEG2"
 # chroma tag → (x_div, y_div); mono has no chroma planes
 _Y4M_CHROMA = {
@@ -500,56 +369,3 @@ def decode_video_stats(media: DataFrame, payload_col: str = "payload",
             )
 
     return media.mapInPandas(run, schema=_VIDEO_STATS_SCHEMA)
-
-
-_FRAME_SAMPLE_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("frame_idx", T.IntegerType(), True),
-    T.StructField("frame_ts_ms", T.DoubleType(), True),
-    T.StructField("mean_luma", T.DoubleType(), True),
-    T.StructField("frame_sha", T.StringType(), True),
-    T.StructField("decode_error", T.StringType(), True),
-])
-
-
-def sample_frames(media: DataFrame, every_n: int = 25,
-                  payload_col: str = "payload",
-                  id_col: str = "media_id") -> DataFrame:
-    """REAL frame sampling: decode Y4M payloads and emit one row per
-    every_n-th frame with its timestamp, mean luma, and pixel sha —
-    the decode stage that ``frame_sample_plan`` schedules."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    frames, _, fps = decode_y4m(bytes(payload))
-                    for i in range(0, len(frames), every_n):
-                        f = frames[i]
-                        rows.append((
-                            int(mid), i,
-                            1000.0 * i / fps if fps > 0 else None,
-                            float(f.mean()),
-                            hashlib.sha256(f.tobytes()).hexdigest(), None,
-                        ))
-                except Exception as exc:
-                    rows.append((int(mid), None, None, None, None, str(exc)))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FRAME_SAMPLE_SCHEMA.fields]
-            )
-
-    return media.mapInPandas(run, schema=_FRAME_SAMPLE_SCHEMA)
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling SCHEDULE: one row per planned frame timestamp
-    (``sample_frames`` above performs the actual decode). Pure Catalyst —
-    explode over a sequence bounded by duration."""
-    vids = media.filter(F.col("kind") == "video")
-    return vids.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )

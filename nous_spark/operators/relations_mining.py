@@ -1,50 +1,11 @@
-"""Bootstrap relation mining (N9/J12/A15 — RelationMiner.scala:8-63).
-
-Seed-driven pattern harvesting: given seed (subj, obj) pairs (or seed
-predicates), find corpus triples connecting them and count rule support.
-The reference scans the corpus per seed with driver contains() filters;
-here it's one broadcast join over all seeds at once.
+"""Edge-label distributions over a typed graph: per-vertex incident
+label counts (A11) and the typed 2-edge signature histogram (A6).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def mine_rules_from_seed_pairs(
-    triples: DataFrame, seed_pairs: DataFrame, min_support: int = 1
-) -> DataFrame:
-    """seed_pairs(seed_subj, seed_obj) → (pred, support) for predicates
-    connecting any seed pair (either direction), with support counts
-    (RelationMiner.bootstrapRules + checkBootstrapFilter)."""
-    s = F.broadcast(seed_pairs.select(
-        F.lower("seed_subj").alias("ss"), F.lower("seed_obj").alias("so")
-    ))
-    t = triples.select(
-        F.lower("subj").alias("subj"), "pred", F.lower("obj").alias("obj")
-    )
-    fwd = t.join(s, (t.subj.contains(F.col("ss")) & t.obj.contains(F.col("so"))))
-    rev = t.join(s, (t.subj.contains(F.col("so")) & t.obj.contains(F.col("ss"))))
-    hits = fwd.select("pred").unionAll(rev.select("pred"))
-    return (
-        hits.groupBy("pred")
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
-
-
-def mine_pairs_from_seed_predicates(
-    triples: DataFrame, seed_preds: list[str], min_support: int = 1
-) -> DataFrame:
-    """RelationMiner.minePredicateRules: harvest (subj, obj) pairs for
-    seed predicates, with per-pair occurrence counts."""
-    hits = triples.filter(F.lower(F.col("pred")).isin([p.lower() for p in seed_preds]))
-    return (
-        hits.groupBy(F.lower("subj").alias("subj"), F.lower("obj").alias("obj"))
-        .agg(F.count("*").alias("support"))
-        .filter(F.col("support") >= min_support)
-    )
 
 
 def edge_label_multiset(edges: DataFrame) -> DataFrame:

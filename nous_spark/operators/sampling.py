@@ -1,9 +1,9 @@
-"""Graph sampling V1-V4 (SURVEY.md §2.8 G9; reference
+"""Graph sampling V1 (SURVEY.md §2.8 G9; reference
 Sampling/src/.../RangeSampleAndHoldGeneric.scala:68-345).
 
 The reference collects all triplets to the driver and streams them through
 `scala.util.Random` coin flips — inherently single-node and irreproducible.
-Here every variant is a declarative DataFrame plan over the edge table:
+Here the sample is a declarative DataFrame plan over the edge table:
 
 - vertex scores (degree / pagerank / diversity) are the existing graph ops
 - the "range" filter keeps vertices in the extreme ``range_pct`` tails of
@@ -11,17 +11,13 @@ Here every variant is a declarative DataFrame plan over the edge table:
 - coin flips are seeded xxhash64-uniforms per edge — deterministic,
   partition-independent, resume-stable (re-running the sample yields the
   byte-identical edge set, which the reference cannot do)
-- V2's sequential ``visitedNodes`` hold-set (:218-231) is re-expressed as
-  a first-touch rule: the minimum-ordered edge per endpoint is the "hold"
-  (probability p), subsequent touches are sampled at q — same hold
-  semantics without a driver-side mutable set.
 
-Every op returns the kept edges (same schema as the input edge frame).
+The sample returns the kept edges (same schema as the input edge frame).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nous_spark.operators.graph import degrees
@@ -95,101 +91,3 @@ def sample_and_hold_v1(
     if type_pred is not None:
         keep = keep | (F.col("pred") == type_pred)
     return t.filter(keep).drop("__touch")
-
-
-def sample_and_hold_v2(
-    edges: DataFrame, filtered_v: DataFrame, q: float, p: float,
-    seed: int = 42, type_pred: str | None = "rdf:type",
-) -> DataFrame:
-    """V2 (doSamplingV2, :187-246): sample-and-HOLD. The reference keeps a
-    mutable visited set while streaming edges: a filtered-touching edge
-    with at least one already-visited endpoint is sampled at q, a true
-    first touch (BOTH endpoints fresh, the reference's else-branch) at p,
-    non-touching edges always kept. rdf:type edges are skipped entirely
-    (:217 processes only non-type triplets and never writes them — unlike
-    V1, which always keeps them). Distributed re-expression: the stream is
-    canonicalized to (src, dst, pred) order, and "first touch" = the edge
-    is the FIRST edge incident to each of its endpoints across BOTH roles
-    (a node previously seen as dst is visited when it reappears as src,
-    exactly like the reference's single visitedNodes set, :230-234, which
-    marks every processed edge's endpoints including non-touching ones).
-    Duplicate (src, dst, pred) instances share first-touch status — the
-    one key-level approximation left."""
-    if type_pred is not None:
-        edges = edges.filter(F.col("pred") != type_pred)
-    t = _flag_touching(edges, filtered_v)
-    # per-node first incident edge over the union of both roles
-    app = t.select(F.col("src").alias("__node"), "src", "dst", "pred").unionByName(
-        t.select(F.col("dst").alias("__node"), "src", "dst", "pred")
-    )
-    w = Window.partitionBy("__node").orderBy("src", "dst", "pred")
-    firsts = (
-        app.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .groupBy("src", "dst", "pred")
-        .agg(F.count_distinct("__node").alias("__nf"))
-    )
-    t = (
-        t.join(firsts, ["src", "dst", "pred"], "left")
-        .withColumn(
-            "__first",
-            F.coalesce(F.col("__nf"), F.lit(0))
-            == F.when(F.col("src") == F.col("dst"), 1).otherwise(2),
-        )
-        .drop("__nf")
-    )
-    u = _uniform(seed, "v2", F.col("src"), F.col("dst"), F.col("pred"))
-    keep = F.when(
-        ~F.col("__touch"), F.lit(True)
-    ).when(F.col("__first"), u <= p).otherwise(u <= q)
-    return t.filter(keep).drop("__touch", "__first")
-
-
-def sample_and_hold_v3(
-    edges: DataFrame, filtered_v: DataFrame, q: float, p: float,
-    seed: int = 42, type_pred: str | None = "rdf:type",
-) -> DataFrame:
-    """V3 (doSamplingV3, :248-281): like V1 but non-touching edges are
-    always KEPT (V1 drops them); type edges are dropped entirely."""
-    t = _flag_touching(edges, filtered_v)
-    u1 = _uniform(seed, "v3a", F.col("src"), F.col("dst"), F.col("pred"))
-    u2 = _uniform(seed, "v3b", F.col("src"), F.col("dst"), F.col("pred"))
-    keep = (~F.col("__touch")) | (u1 <= q) | (u2 <= p)
-    if type_pred is not None:
-        keep = keep & (F.col("pred") != type_pred)
-    return t.filter(keep).drop("__touch")
-
-
-def sample_by_score_similarity(
-    edges: DataFrame, scores: DataFrame, q: float, p: float,
-    range_: float | None = None, seed: int = 42,
-    type_pred: str | None = "rdf:type",
-) -> DataFrame:
-    """V4 (doSamplingV4_EdgeFilter, :68-129): keep edges whose endpoint
-    scores are SIMILAR (|s(src) − s(dst)| < range); dissimilar edges
-    survive a q-coin else a p-coin. ``range_`` defaults to the sample
-    stddev of the score distribution (:88-92); type edges are dropped."""
-    if range_ is None:
-        st = scores.agg(
-            F.stddev_samp("score").alias("sd")
-        ).collect()[0]
-        range_ = float(st.sd or 0.0)
-    s_src = scores.select(F.col("id").alias("src"), F.col("score").alias("__ss"))
-    s_dst = scores.select(F.col("id").alias("dst"), F.col("score").alias("__sd"))
-    # scores span all vertices — a regular join (AQE picks the strategy),
-    # unlike the small tail-set broadcasts in _flag_touching
-    t = (
-        edges.join(s_src, "src", "left")
-        .join(s_dst, "dst", "left")
-        .withColumn(
-            "__similar",
-            F.abs(F.coalesce("__ss", F.lit(0.0)) - F.coalesce("__sd", F.lit(0.0)))
-            < F.lit(range_),
-        )
-    )
-    u1 = _uniform(seed, "v4a", F.col("src"), F.col("dst"), F.col("pred"))
-    u2 = _uniform(seed, "v4b", F.col("src"), F.col("dst"), F.col("pred"))
-    keep = F.col("__similar") | (u1 <= q) | (u2 <= p)
-    if type_pred is not None:
-        keep = keep & (F.col("pred") != type_pred)
-    return t.filter(keep).drop("__ss", "__sd", "__similar")

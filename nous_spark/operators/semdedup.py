@@ -33,61 +33,6 @@ from pyspark.sql import functions as F
 from nous_spark.operators.ann import ivf_build_index
 
 
-def semantic_pairs(
-    embeddings: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_cells: int = 16,
-    kmeans_iter: int = 5,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Within-cell semantic near-duplicate pairs: (a, b, cell, cosine)
-    with a < b and cosine >= threshold, where a and b share a k-means
-    cell. Pairs across cells are never examined — that is the SemDeDup
-    trade (recall bounded by clustering quality) bought for never
-    running an all-pairs comparison."""
-    _, assigned = ivf_build_index(
-        embeddings, dim=dim, n_cells=n_cells, kmeans_iter=kmeans_iter,
-        seed=seed, id_col=id_col, vec_col=vec_col,
-    )
-
-    def cell_block(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({
-            "a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64"),
-            "cell": pd.Series(dtype="int32"),
-            "cosine": pd.Series(dtype="float64"),
-        })
-        if len(pdf) < 2:
-            return empty
-        ids = pdf["vec_id"].to_numpy()
-        m = np.asarray(pdf["v_emb"].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(m, axis=1)
-        norms[norms == 0.0] = 1.0
-        m = m / norms[:, None]
-        sims = m @ m.T
-        iu, ju = np.triu_indices(len(ids), k=1)
-        keep = sims[iu, ju] >= threshold
-        iu, ju = iu[keep], ju[keep]
-        a, b = ids[iu], ids[ju]
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame({
-            "a": lo, "b": hi,
-            "cell": pdf["cell"].iloc[0],
-            "cosine": np.round(sims[iu, ju], 6),
-        })
-
-    id_type = dict(assigned.dtypes)["vec_id"]
-    return assigned.groupBy("cell").applyInPandas(
-        cell_block,
-        schema=f"a {id_type}, b {id_type}, cell int, cosine double",
-    )
-
-
 def semantic_dedup(
     embeddings: DataFrame,
     dim: int,

@@ -11,6 +11,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """A quarter of physical memory, at least 1 GiB: 48g on a 192 GB
+    host, and on a 16 GB one small enough that ParallelGC cannot grow the
+    JVM until the kernel kills it. ``NOUS_DRIVER_MEM`` overrides it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(total // 4, 1 << 30) >> 20}m"
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "nous_spark",
@@ -44,7 +52,8 @@ def get_spark(
                 os.environ.get("NOUS_MAX_PARTITION_BYTES", "16m"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("NOUS_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("NOUS_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # ParallelGC: G1 (the JDK default) collapses under many concurrent

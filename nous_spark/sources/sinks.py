@@ -1,4 +1,5 @@
-"""Sinks (S13-S15): partitioned triple tables + checkpoint dumps.
+"""Triple sinks (S13): salted, pred-partitioned triple tables, plain or
+dictionary-encoded.
 
 The head-predicate/head-entity skew problem (a handful of predicates like
 rdf:type / imports carry most rows) is handled with an explicit salt
@@ -93,68 +94,4 @@ def read_triples_encoded(spark: SparkSession, path: str) -> DataFrame:
                          F.col("label").alias("obj_label")), "o")
         .select(F.col("subj_label").alias("subj"), "pred",
                 F.col("obj_label").alias("obj"), *other)
-    )
-
-
-def write_triples_bucketed(
-    triples: DataFrame,
-    table_name: str,
-    buckets: int = 64,
-    key: str = "subj",
-    mode: str = "overwrite",
-) -> None:
-    """S13 co-location variant: a bucketed + sorted triple TABLE for
-    workloads that repeatedly join on the subject key (alias resolution,
-    degree joins, path expansion). ``bucketBy(subj) + sortBy(subj)``
-    pre-shuffles and pre-sorts at write time, so every later
-    bucketed⋈bucketed subj-join runs with NO Exchange and NO Sort on
-    either side — at 100 TB that converts the dominant repeated shuffle
-    of the linking stage into a one-time write cost. Plan-verified in
-    tests (SortMergeJoin with zero Exchange nodes).
-
-    Bucketed tables must go through the session catalog (saveAsTable) —
-    a bare parquet path cannot carry bucket metadata."""
-    (
-        triples.write.mode(mode).format("parquet")
-        .bucketBy(buckets, key).sortBy(key)
-        .saveAsTable(table_name)
-    )
-
-
-def write_pattern_outputs(frequent: DataFrame, per_batch: DataFrame,
-                          dep_edges: DataFrame, root: str) -> None:
-    """S14 (DatatoPatternGraph.scala:493-506): frequent patterns, per-batch
-    log (partitioned by batch), dependency edges."""
-    frequent.write.mode("overwrite").parquet(f"{root}/frequent_patterns")
-    per_batch.write.mode("overwrite").partitionBy("batch_id").parquet(
-        f"{root}/frequent_patterns_per_batch"
-    )
-    dep_edges.write.mode("overwrite").parquet(f"{root}/dependency_graph")
-
-
-def write_training_shards(
-    packed: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    source_col: str = "source",
-) -> None:
-    """Materialize a packed training set (the output of
-    ``datasets.prepare_training_set`` / ``pack_into_shards``) as parquet
-    partitioned by (split, source): the loader reads one split by
-    partition pruning alone, and per-source mixture adjustments at load
-    time stay file-level operations.
-
-    The pre-write repartition on (split, source, shard_id) lines writer
-    tasks up with shards — each shard's rows land together instead of
-    being scattered across whichever tasks held them, so a data loader
-    streaming shard files in shard_id order sees contiguous token
-    streams. Same skew logic as ``write_triples``: the shard id is
-    already a balanced key (shards are token-budget-equal by
-    construction), so no extra salt is needed."""
-    (
-        packed.repartition(F.col("split"), F.col(source_col),
-                           F.col("shard_id"))
-        .write.mode(mode)
-        .partitionBy("split", source_col)
-        .parquet(path)
     )

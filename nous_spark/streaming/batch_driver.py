@@ -1,13 +1,9 @@
-"""Incremental streaming frequent-pattern miner (SURVEY.md §2.9, §3.3).
+"""Streaming near-duplicate filter driven one microbatch at a time
+(SURVEY.md §2.9, §3.3).
 
-The reference's "streaming" is a driver for-loop over batch files with a
-GraphX window graph (DatatoPatternGraph.scala:212-216, maintainWindow
-:1173-1182). This driver keeps the same semantics — batch ids from event
-time, sliding window eviction — but the state lives in parquet tables
-(StateStore), so the stream is resumable and the per-batch lineage is
-explicit. The reference's admitted defect (window merge re-mines
-historical nodes, comment :259-271) is fixed by the batch-recency
-predicate in the growth join (J6, grow_patterns(cur_batch=...)).
+The reference's "streaming" is a driver for-loop over batch files. This
+driver keeps that shape, but its state lives in parquet, so the stream
+is resumable and replaying a batch is idempotent.
 """
 
 from __future__ import annotations
@@ -15,122 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nous_spark.operators.mining import (
-    filter_frequent_instances,
-    grow_patterns,
-    min_image_support_arr,
-    split_frequent,
-)
-from nous_spark.plans.lineage import StateStore
-
-
-def one_edge_instances(quads: DataFrame, types: DataFrame | None = None) -> DataFrame:
-    """GIP 1-edge instances (getGIPVerticesNoMap :1106-1154) with type
-    augmentation (J8 getTypedGraph :1157-1170).
-
-    quads(src, pred, dst, batch_id); types(id, vtype) optional.
-    → instances(inst_id, pattern_key, binding, endpoints, batch_id)
-    """
-    q = quads
-    if types is not None:
-        ts = types.select(F.col("id").alias("src"), F.col("vtype").alias("src_type"))
-        td = types.select(F.col("id").alias("dst"), F.col("vtype").alias("dst_type"))
-        q = (
-            q.join(F.broadcast(ts), "src", "left")
-            .join(F.broadcast(td), "dst", "left")
-            .withColumn("src_type", F.coalesce("src_type", F.lit("any")))
-            .withColumn("dst_type", F.coalesce("dst_type", F.lit("any")))
-        )
-    else:
-        q = q.withColumn("src_type", F.lit("any")).withColumn("dst_type", F.lit("any"))
-    return q.select(
-        F.xxhash64("src", "pred", "dst", "batch_id").alias("inst_id"),
-        F.concat_ws(",", "src_type", F.col("pred").cast("string"), "dst_type").alias(
-            "pattern_key"
-        ),
-        F.array(F.col("src").cast("long"), F.col("dst").cast("long")).alias("binding"),
-        F.array(F.col("src").cast("long"), F.col("dst").cast("long")).alias("endpoints"),
-        F.col("batch_id").cast("int").alias("batch_id"),
-    ).dropDuplicates(["pattern_key", "binding", "batch_id"])
-
-
-class StreamingPatternMiner:
-    """foreachBatch-shaped incremental miner with parquet-backed state."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_root: str,
-        mis_support: int = 2,
-        window_batches: int = 3,
-        max_pattern_edges: int = 2,
-    ):
-        self.spark = spark
-        self.store = StateStore(spark, state_root)
-        self.mis_support = mis_support
-        self.window = window_batches
-        # growth iterations = log2(maxPatternSize) (reference :149,396-474)
-        self.growth_iters = max(0, (max_pattern_edges - 1).bit_length())
-
-    def _window_instances(self, cur_batch: int) -> DataFrame | None:
-        dfs = []
-        for b in range(max(0, cur_batch - self.window + 1), cur_batch + 1):
-            if self.store.is_done("instances", b):
-                dfs.append(self.store.read_stage("instances", b))
-        if not dfs:
-            return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def process_batch(self, quads: DataFrame, batch_id: int,
-                      types: DataFrame | None = None) -> DataFrame:
-        """Ingest one batch; returns the window's frequent patterns with
-        supports. Resumable: a re-run of a done batch is a state read."""
-        if self.store.is_done("frequent", batch_id):
-            return self.store.read_stage("frequent", batch_id)
-
-        self.store.run_stage(
-            "instances", batch_id,
-            lambda: one_edge_instances(quads, types),
-            rows_in=quads.count,
-        )
-        window_inst = self._window_instances(batch_id)
-
-        def mine() -> DataFrame:
-            inst = window_inst
-            supports = min_image_support_arr(inst)
-            freq, _ = split_frequent(supports, self.mis_support)
-            inst = filter_frequent_instances(inst, freq)
-            all_freq = freq
-            for _ in range(self.growth_iters):
-                grown = grow_patterns(inst, cur_batch=batch_id)
-                if grown.limit(1).count() == 0:
-                    break
-                g_supports = min_image_support_arr(grown)
-                g_freq, _ = split_frequent(g_supports, self.mis_support)
-                if g_freq.limit(1).count() == 0:
-                    break
-                inst = filter_frequent_instances(grown, g_freq)
-                all_freq = all_freq.unionByName(g_freq)
-            return all_freq.withColumn("batch_id_emitted", F.lit(batch_id))
-
-        return self.store.run_stage("frequent", batch_id, mine)
-
-    def cumulative_frequent(self) -> DataFrame:
-        """A5: union of all per-batch frequent tables."""
-        return self.store.read_all_batches("frequent")
-
 
 class StreamingNearDupFilter:
     """Streaming near-duplicate KEEP/DROP — the decision loop that
     ``streaming_minhash_candidates`` (structured.py) leaves to the
-    consumer, in the same foreachBatch-driver shape as
-    ``StreamingPatternMiner``: per microbatch, arriving docs are judged
-    against the parquet-backed frontier of previously KEPT signatures
-    (first arrival wins), then against each other with the batch
-    keeper policy.
+    consumer, in a foreachBatch-driver shape: per microbatch, arriving
+    docs are judged against the parquet-backed frontier of previously
+    KEPT signatures (first arrival wins), then against each other with
+    the batch keeper policy.
 
     Semantics (the streaming twin of ``near_duplicate_clusters``):
       - cross-batch: a doc whose signature est-matches any KEPT doc from
@@ -266,38 +154,3 @@ class StreamingNearDupFilter:
             f"{self.state_root}/kept_sigs/batch={batch_id}"
         ).select(F.col("id").alias(id_col))
         return batch_df.join(kept_ids, id_col)
-
-
-def start_near_dup_stream(
-    spark: SparkSession,
-    source_dir: str,
-    out_root: str,
-    schema: str,
-    checkpoint_dir: str | None = None,
-    **filter_kwargs,
-):
-    """Attach StreamingNearDupFilter to a real readStream via
-    foreachBatch: kept docs land under out_root/kept/batch=N with
-    exactly-once replay via the streaming checkpoint (a replayed batch
-    recomputes the same decision because the frontier excludes itself).
-    Returns the StreamingQuery."""
-    dedup = StreamingNearDupFilter(spark, f"{out_root}/state",
-                                   **filter_kwargs)
-    checkpoint_dir = checkpoint_dir or f"{out_root}/_stream_checkpoint"
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        kept = dedup.process_batch(batch_df, int(batch_id))
-        kept.write.mode("overwrite").parquet(
-            f"{out_root}/kept/batch={batch_id}")
-
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -5,10 +5,6 @@ import os
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "8")  # keep test JVM small
-# get_spark's 48g default heap lets ParallelGC grow the one test JVM past
-# the RAM of a 15 GB host (12-14 GB RSS by the end of the gate tests),
-# where the kernel kills it mid-suite; the whole suite passes at 4g
-os.environ.setdefault("NOUS_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")

@@ -500,34 +500,6 @@ def test_graph_driver_fast_paths_parity(spark, distributed):
         [], [("id", "bigint"), ("label", "bigint")])
 
 
-def test_write_training_shards_roundtrip(spark, tmp_path):
-    from nous_spark.operators.datasets import prepare_training_set
-    from nous_spark.sources.sinks import write_training_shards
-
-    rows = [
-        (i, "web" if i % 2 == 0 else "code",
-         "the quick brown fox jumps over the lazy dog plus filler "
-         f"tokens alpha beta gamma delta epsilon zeta {i}")
-        for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
-    packed = prepare_training_set(
-        df, langs=("en",), min_tokens=5, budget_tokens=64,
-        split_weights={"train": 0.8, "val": 0.2},
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(packed, out)
-    back = spark.read.parquet(out)
-    a = sorted(map(tuple, packed.select(sorted(packed.columns)).collect()))
-    b = sorted(map(tuple, back.select(sorted(back.columns)).collect()))
-    assert a == b
-    # split partition dirs exist -> loader prunes by split
-    import os
-
-    assert {d for d in os.listdir(out) if d.startswith("split=")} == \
-        {"split=train", "split=val"}
-
-
 def test_split_and_mixture_compose_on_streams(spark, tmp_path):
     """split_dataset and mixture_sample are stateless projections /
     broadcast-join filters, so they must run unchanged on a structured

@@ -221,11 +221,8 @@ def test_contamination_check(spark):
 
 def test_duplicate_spans_planted_recall_and_strip(spark):
     """Every planted boilerplate occurrence is recovered as a span with
-    exact token coordinates; strip keeps the first occurrence only and
-    reports stripped token counts (Lee et al. keep-one policy)."""
-    from pyspark.sql import functions as F
-
-    from nous_spark.operators.dedup import duplicate_spans, strip_duplicate_spans
+    exact token coordinates."""
+    from nous_spark.operators.dedup import duplicate_spans
 
     boiler = " ".join(f"b{i}" for i in range(15))      # 15-token block
     filler = lambda did: " ".join(f"u{did}_{i}" for i in range(10))
@@ -240,15 +237,6 @@ def test_duplicate_spans_planted_recall_and_strip(spark):
     got = {(r.doc_id, r.span_start, r.span_end) for r in sp.collect()}
     assert got == {(0, 0, 14), (1, 10, 24), (3, 10, 24)}, got
     assert all(r.span_text == boiler for r in sp.collect())
-
-    out = {r.doc_id: r for r in strip_duplicate_spans(docs, sp).collect()}
-    assert out[0].text == rows[0][1]                   # first occurrence kept
-    assert out[0].n_stripped_tokens == 0
-    assert out[1].text == filler(1)
-    assert out[1].n_stripped_tokens == 15
-    assert out[2].text == rows[2][1]
-    assert out[3].text == filler(3) + " " + filler(30)
-    assert out[3].n_stripped_tokens == 15
 
 
 def test_duplicate_spans_short_docs_and_min_docs(spark):

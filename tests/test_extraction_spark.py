@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from nous_spark.corpus import corpus_df, generate_corpus
 from nous_spark.operators.extraction import extract_triples, with_content_sha
 from nous_spark.operators.filters import (
-    dedup_triples,
     purge_longest_object,
     top_k_per_group,
     valid_lines,
@@ -63,11 +62,6 @@ def test_valid_lines_and_dedup(spark):
         [("# comment",), ("@prefix",), ("",), ("good line",)], ["line"]
     )
     assert [r.line for r in valid_lines(df).collect()] == ["good line"]
-    t = spark.createDataFrame(
-        [("a", "p", "b", 1), ("a", "p", "b", 2), ("a", "q", "b", 3)],
-        ["subj", "pred", "obj", "x"],
-    )
-    assert dedup_triples(t).count() == 2
 
 
 def test_top_k_per_group(spark):

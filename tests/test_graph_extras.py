@@ -1,18 +1,12 @@
-"""PageRank, dictionary encoding, sampling, bootstrap mining, signatures."""
+"""PageRank, dictionary encoding, edge-label multisets, signatures."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nous_spark.operators.graph import (
-    dictionary_encode,
-    pagerank,
-    stratified_sample_edges,
-)
+from nous_spark.operators.graph import dictionary_encode, pagerank
 from nous_spark.operators.relations_mining import (
     edge_label_multiset,
-    mine_pairs_from_seed_predicates,
-    mine_rules_from_seed_pairs,
     two_edge_signatures,
 )
 
@@ -52,32 +46,6 @@ def test_dictionary_encode(spark):
     assert d["a"] < d["b"] < d["x"] < d["y"]  # deterministic: sorted labels
     rows = enc.collect()
     assert all(r.subj_id == d[r.subj] and r.obj_id == d[r.obj] for r in rows)
-
-
-def test_stratified_sample(spark):
-    e = spark.createDataFrame(
-        [(i, i + 1, float(i % 100)) for i in range(2000)], ["src", "dst", "w"]
-    )
-    s = stratified_sample_edges(e, "w", seed=7)
-    n = s.count()
-    assert 0 < n < 2000
-    # deterministic under the same seed
-    assert stratified_sample_edges(e, "w", seed=7).count() == n
-
-
-def test_bootstrap_rules(spark):
-    triples = spark.createDataFrame(
-        [("paris", "capital_of", "france"),
-         ("paris city", "located_in", "france republic"),
-         ("berlin", "capital_of", "germany"),
-         ("lyon", "located_in", "france")],
-        ["subj", "pred", "obj"],
-    )
-    seeds = spark.createDataFrame([("paris", "france")], ["seed_subj", "seed_obj"])
-    rules = {r.pred: r.support for r in mine_rules_from_seed_pairs(triples, seeds).collect()}
-    assert rules == {"capital_of": 1, "located_in": 1}
-    pairs = mine_pairs_from_seed_predicates(triples, ["capital_of"]).collect()
-    assert {(r.subj, r.obj) for r in pairs} == {("paris", "france"), ("berlin", "germany")}
 
 
 def test_edge_label_multiset(spark):

@@ -293,22 +293,6 @@ def test_bgp_optional_refusals(spark):
                                  [("?y", "likes", "?l")]])
 
 
-def test_bgp_union_aligns_variables_with_nulls(spark):
-    from nous_spark.operators.bgp import match_union
-
-    df = spark.createDataFrame(TRIPLES, "subj string, pred string, obj string")
-    got = match_union(
-        df,
-        [("?x", "type", "robot")],
-        [("?x", "likes", "?l")],
-    )
-    assert sorted(got.columns) == ["l", "x"]
-    rows = sorted((r.x, r.l) for r in got.collect()
-                  if r.l is not None) + sorted(
-        (r.x, r.l) for r in got.collect() if r.l is None)
-    assert rows == [("a", "c"), ("b", "b"), ("c", None)]
-
-
 def test_match_path_bfs_brute_force(spark):
     """Bounded path over a cyclic graph vs a Python BFS per source."""
     from nous_spark.operators.bgp import match_path

@@ -1,25 +1,13 @@
-"""Tests: multimodal plumbing, sources, streaming miner, mining aggs,
-textstats."""
+"""Tests: sources, mining aggs, textstats."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from nous_spark.operators.mining import (
-    mark_redundant,
-    min_image_support,
-    min_image_support_arr,
-)
-from nous_spark.operators.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    synthetic_media,
-)
+from nous_spark.operators.mining import min_image_support
 from nous_spark.operators.textstats import fingerprint, language_id
 from nous_spark.sources.readers import read_lg_graph, read_temporal_quads, read_triples_tsv
 from nous_spark.sources.sinks import write_triples
-from nous_spark.streaming.batch_driver import StreamingPatternMiner, one_edge_instances
 
 
 def test_min_image_support_semantics(spark):
@@ -31,90 +19,6 @@ def test_min_image_support_semantics(spark):
     sup = {r.pattern_key: r.support
            for r in min_image_support(inst, ["b0", "b1"]).collect()}
     assert sup == {"p1": 1, "p2": 2}
-    arr = spark.createDataFrame(
-        [("p1", [1, 5]), ("p1", [2, 5])], ["pattern_key", "binding"]
-    )
-    sup2 = {r.pattern_key: r.support for r in min_image_support_arr(arr).collect()}
-    assert sup2 == {"p1": 1}
-
-
-def test_mark_redundant(spark):
-    deps = spark.createDataFrame(
-        [("p", "pc1"), ("p", "pc2"), ("q", "qc1")],
-        ["parent_pattern_key", "child_pattern_key"],
-    )
-    sups = spark.createDataFrame(
-        [("p", 5), ("pc1", 5), ("pc2", 3), ("q", 4), ("qc1", 2)],
-        ["pattern_key", "support"],
-    )
-    out = {r.pattern_key: (r.is_redundant, r.is_closed)
-           for r in mark_redundant(deps, sups).collect()}
-    assert out["p"] == (True, False)   # child pc1 equals parent support
-    assert out["q"] == (False, True)   # all children strictly lower
-
-
-def test_streaming_miner_window(spark, tmp_path):
-    def quads(b):
-        # a frequent A->B motif in every batch + a single-binding noise edge
-        # (same binding every batch → window MIS support stays 1)
-        rows = [(i, 1, 100 + i, b) for i in range(4)] + [(50, 9, 60, b)]
-        return spark.createDataFrame(rows, ["src", "pred", "dst", "batch_id"])
-
-    miner = StreamingPatternMiner(spark, str(tmp_path / "mine"),
-                                  mis_support=2, window_batches=2,
-                                  max_pattern_edges=2)
-    for b in range(3):
-        freq = miner.process_batch(quads(b), b)
-        rows = {r.pattern_key: r.support for r in freq.collect()}
-        assert "any,1,any" in rows and rows["any,1,any"] >= 4
-        assert "any,9,any" not in rows  # support 1 per batch < misSupport
-    # resume: re-processing a done batch reads state, returns same result
-    again = miner.process_batch(quads(1), 1)
-    assert {r.pattern_key for r in again.collect()} >= {"any,1,any"}
-
-
-def test_one_edge_instances_typed(spark):
-    quads = spark.createDataFrame([(1, 7, 2, 0)], ["src", "pred", "dst", "batch_id"])
-    types = spark.createDataFrame([(1, "person"), (2, "city")], ["id", "vtype"])
-    row = one_edge_instances(quads, types).collect()[0]
-    assert row.pattern_key == "person,7,city"
-    assert row.binding == [1, 2]
-
-
-def test_multimodal_features(spark):
-    # synthetic_media payloads are real PNG/WAV/Y4M — every kind must
-    # decode through its real decoder, no errors, unit-norm features
-    media = synthetic_media(spark, n=12)
-    feats = extract_features(media, dim=16).collect()
-    assert len(feats) == 12
-    assert all(r.decode_error is None for r in feats), [r.decode_error for r in feats]
-    assert all(len(r.feature) == 16 for r in feats)
-    assert all(r.n_bytes > 0 for r in feats)
-    for r in feats:
-        assert abs(sum(x * x for x in r.feature) - 1.0) < 1e-3, r.kind
-    # deterministic across runs
-    feats2 = extract_features(synthetic_media(spark, n=12), dim=16).collect()
-    assert {r.media_id: list(r.feature) for r in feats} == \
-        {r.media_id: list(r.feature) for r in feats2}
-
-
-def test_multimodal_undecodable_is_data(spark):
-    from nous_spark.operators.multimodal import MEDIA_SCHEMA
-
-    rows = [(0, "image", "image/jpeg", 4, 4, None, bytearray(b"\xff\xd8junk")),
-            (1, "video", "video/mp4", 4, 4, 1000, bytearray(b"\x00\x00ftypmp4"))]
-    media = spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
-    feats = extract_features(media, dim=8).collect()
-    assert all(r.decode_error is not None for r in feats)
-    assert all(list(r.feature) == [] for r in feats)
-
-
-def test_frame_sample_plan(spark):
-    media = synthetic_media(spark, n=9)
-    plan = frame_sample_plan(media, every_ms=500)
-    rows = plan.collect()
-    assert all(r.frame_ts_ms % 500 == 0 for r in rows)
-    assert len(rows) > 0
 
 
 def test_read_triples_tsv(spark, tmp_path):
@@ -213,40 +117,6 @@ def test_embedding_near_duplicates(spark):
     assert (1, 2) in pairs and pairs[(1, 2)] > 0.99
     assert (3, 4) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
-def test_write_pattern_outputs_roundtrip(spark, tmp_path):
-    """S14: frequent/per-batch/dep-edge sinks write readable, partitioned
-    parquet that round-trips value-identically."""
-    from nous_spark.sources.sinks import write_pattern_outputs
-
-    frequent = spark.createDataFrame(
-        [("(1,2,3)", 5), ("(4,5,6)", 2)], ["pat_str", "support"]
-    )
-    per_batch = spark.createDataFrame(
-        [(40, "(1,2,3)", 3), (41, "(1,2,3)", 2), (41, "(4,5,6)", 2)],
-        ["batch_id", "pat_str", "support"],
-    )
-    dep = spark.createDataFrame(
-        [("(1,2,3)", "(1,2,3)+(4,5,6)")],
-        ["parent_pattern_key", "child_pattern_key"],
-    )
-    root = str(tmp_path / "patterns")
-    write_pattern_outputs(frequent, per_batch, dep, root)
-
-    back_f = spark.read.parquet(f"{root}/frequent_patterns")
-    assert {(r.pat_str, r.support) for r in back_f.collect()} == {
-        ("(1,2,3)", 5), ("(4,5,6)", 2)
-    }
-    import os
-
-    per_dirs = os.listdir(f"{root}/frequent_patterns_per_batch")
-    assert "batch_id=40" in per_dirs and "batch_id=41" in per_dirs
-    back_pb = spark.read.parquet(f"{root}/frequent_patterns_per_batch")
-    assert back_pb.count() == 3
-    assert {r.batch_id for r in back_pb.collect()} == {40, 41}
-    back_d = spark.read.parquet(f"{root}/dependency_graph")
-    assert back_d.collect()[0].child_pattern_key == "(1,2,3)+(4,5,6)"
 
 
 def test_read_triples_las_munging(spark, tmp_path):
@@ -455,39 +325,6 @@ def test_mask_pii_kinds_and_density(spark):
     assert "4111" not in out[1].masked
     assert out[2].masked == rows[2][1] and out[2].n_pii == 0
     assert out[0].n_pii == 2 and out[1].n_pii == 3
-
-
-def test_bucketed_triple_join_avoids_shuffle(spark):
-    """write_triples_bucketed: a bucketed-x-bucketed join on the bucket
-    key must execute with ZERO Exchange nodes (the co-location contract
-    that makes repeated subj-joins one-time-shuffle at 100 TB)."""
-    from pyspark.sql import functions as F
-
-    from nous_spark.sources.sinks import write_triples_bucketed
-
-    t = spark.range(200).select(
-        (F.col("id") % 40).cast("long").alias("subj"),
-        F.lit("p").alias("pred"),
-        F.col("id").cast("string").alias("obj"),
-    )
-    for name in ("bkt_a", "bkt_b"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_triples_bucketed(t, name, buckets=4)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("bkt_a").alias("l").join(
-            spark.table("bkt_b").alias("r"), "subj"
-        )
-        n = j.count()
-        assert n == 200 * 5  # 40 keys x 5 rows each side
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        for name in ("bkt_a", "bkt_b"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_normalize_urls_and_chunking(spark):

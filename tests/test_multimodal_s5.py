@@ -11,7 +11,6 @@ from nous_spark.operators.multimodal import (
     decode_png,
     decode_ppm,
     encode_png,
-    resize_image_nearest,
 )
 from nous_spark.sources.readers import detect_and_parse_json
 
@@ -75,13 +74,6 @@ def test_ppm_decode():
     img = _img(5, 7, 3, seed=3)
     data = b"P6\n# comment\n7 5\n255\n" + img.tobytes()
     assert (decode_ppm(data) == img).all()
-
-
-def test_resize_nearest():
-    img = _img(8, 8, 3, seed=4)
-    out = resize_image_nearest(img, 4, 4)
-    assert out.shape == (4, 4, 3)
-    assert (out[0, 0] == img[0, 0]).all()
 
 
 def test_decode_image_stats_spark(spark):
@@ -219,20 +211,6 @@ def test_decode_video_stats_spark(spark):
         assert abs(r.mean_luma - float(frames.mean())) < 1e-9
         assert abs(r.duration_ms - 100.0 * (3 + i)) < 1e-9
     assert out[99].decode_error is not None
-
-
-def test_sample_frames_real_decode(spark):
-    from nous_spark.operators.multimodal import encode_y4m, sample_frames
-
-    frames = np.random.default_rng(7).integers(0, 256, (10, 4, 4), dtype=np.uint8)
-    media = spark.createDataFrame(
-        [(1, bytearray(encode_y4m(frames, fps_num=5)))], ["media_id", "payload"]
-    )
-    got = sorted(sample_frames(media, every_n=4).collect(), key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in got] == [0, 4, 8]
-    assert [r.frame_ts_ms for r in got] == [0.0, 800.0, 1600.0]
-    for r in got:
-        assert abs(r.mean_luma - float(frames[r.frame_idx].mean())) < 1e-9
 
 
 def test_y4m_chroma_variants():

@@ -40,15 +40,6 @@ def test_semi_join_broadcasts_small_side(spark, sf_dir):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
-def test_frequent_filter_broadcasts(spark):
-    from nous_spark.operators.mining import filter_frequent_instances
-
-    inst = spark.createDataFrame([("p1", 1)], ["pattern_key", "x"])
-    freq = spark.createDataFrame([("p1",)], ["pattern_key"])
-    plan = _plan(filter_frequent_instances(inst, freq))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_degree_partial_aggregation(spark, sf_dir):
     """degrees() must do map-side partial aggregation (HashAggregate
     before and after the exchange) and stay in whole-stage codegen."""

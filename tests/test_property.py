@@ -118,51 +118,6 @@ def test_las_reader_matches_python_reference(spark, tmp_path_factory, lines):
     assert got == _las_reference(lines)
 
 
-@settings(max_examples=6, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(st.lists(st.tuples(st.integers(0, 8), st.integers(0, 8),
-                          st.sampled_from(["p", "q", "r"])),
-                min_size=1, max_size=20, unique=True),
-       st.sets(st.integers(0, 8), min_size=1, max_size=4))
-def test_sample_v2_matches_stream_simulation(spark, edges, filtered):
-    """sample_and_hold_v2's rank-based first-touch must equal a literal
-    sequential simulation of the reference's visited-set stream
-    (RangeSampleAndHoldGeneric.scala:218-246) over the canonical
-    (src, dst, pred) order, at the two deterministic corners
-    (q=0,p=1: keep only true first touches; q=1,p=0: keep only
-    already-visited touches). Non-touching edges are always kept."""
-    from nous_spark.operators.sampling import sample_and_hold_v2
-
-    def simulate(keep_first: bool):
-        visited: set[int] = set()
-        kept = []
-        for (s, d, p) in sorted(edges):
-            touching = s in filtered or d in filtered
-            if touching:
-                fresh = s not in visited and d not in visited
-                if fresh == keep_first:
-                    kept.append((s, d, p))
-            else:
-                kept.append((s, d, p))
-            visited.update((s, d))
-        return sorted(kept)
-
-    e = spark.createDataFrame(edges, ["src", "dst", "pred"])
-    fv = spark.createDataFrame([(x,) for x in filtered], ["id"])
-    got_first = sorted(
-        (r.src, r.dst, r.pred)
-        for r in sample_and_hold_v2(e, fv, q=0.0, p=1.0, seed=3,
-                                    type_pred=None).collect()
-    )
-    got_visited = sorted(
-        (r.src, r.dst, r.pred)
-        for r in sample_and_hold_v2(e, fv, q=1.0, p=0.0, seed=3,
-                                    type_pred=None).collect()
-    )
-    assert got_first == simulate(True)
-    assert got_visited == simulate(False)
-
-
 _TEXT = st.text(
     alphabet=st.sampled_from(list("ab \n\t.!é的")),
     min_size=0, max_size=60,

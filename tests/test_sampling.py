@@ -1,4 +1,4 @@
-"""Sampling V1-V4 keep-set semantics on seeded fixtures
+"""Sampling V1 keep-set semantics on seeded fixtures
 (reference RangeSampleAndHoldGeneric.scala:68-345)."""
 
 from __future__ import annotations
@@ -8,9 +8,6 @@ from pyspark.sql import functions as F
 
 from nous_spark.operators.sampling import (
     sample_and_hold_v1,
-    sample_and_hold_v2,
-    sample_and_hold_v3,
-    sample_by_score_similarity,
     tail_vertices,
     vertex_scores,
 )
@@ -75,71 +72,6 @@ def test_v1_semantics_and_determinism(edges, hub_only):
     )
 
 
-def test_v2_hold_first_touch(spark):
-    # all edges share BOTH endpoints' partitions: multi-edges 0→1 with
-    # distinct preds so first-touch is exactly one edge
-    rows = [(0, 1, f"p{i:02d}") for i in range(20)]
-    e = spark.createDataFrame(rows, ["src", "dst", "pred"])
-    fv = spark.createDataFrame([(0,)], ["id"])
-    kept = sample_and_hold_v2(e, fv, q=0.0, p=1.0, seed=3, type_pred=None)
-    got = kept.collect()
-    # only the (src,dst,pred)-minimal edge is a first touch → held at p=1
-    assert len(got) == 1 and got[0].pred == "p00"
-    # q=1, p=0: everything EXCEPT the held first-touch edge survives
-    assert sample_and_hold_v2(e, fv, q=1.0, p=0.0, seed=3, type_pred=None).count() == 19
-
-
-def test_v2_drops_type_edges(edges, hub_only):
-    # doSamplingV2 (:217) processes only non-type triplets and never
-    # writes rdf:type edges — unlike V1, which always keeps them
-    kept = sample_and_hold_v2(edges, hub_only, q=1.0, p=1.0, seed=3)
-    assert kept.filter(F.col("pred") == "rdf:type").count() == 0
-
-
-def test_v2_first_touch_requires_both_endpoints_fresh(spark):
-    # reference else-branch: p applies only when NEITHER endpoint is
-    # visited. (0,1,"x") is rank-1 for both 0 and 1 → held at p;
-    # (0,2,"y") is rank-2 for src 0 (visited) though rank-1 for dst 2 →
-    # sampled at q, NOT held
-    e = spark.createDataFrame([(0, 1, "x"), (0, 2, "y")], ["src", "dst", "pred"])
-    fv = spark.createDataFrame([(0,)], ["id"])
-    kept = {
-        r.pred
-        for r in sample_and_hold_v2(
-            e, fv, q=0.0, p=1.0, seed=3, type_pred=None
-        ).collect()
-    }
-    assert kept == {"x"}
-    kept_q = {
-        r.pred
-        for r in sample_and_hold_v2(
-            e, fv, q=1.0, p=0.0, seed=3, type_pred=None
-        ).collect()
-    }
-    assert kept_q == {"y"}
-
-
-def test_v3_keeps_untouched_drops_type(edges, hub_only):
-    kept = sample_and_hold_v3(edges, hub_only, q=0.0, p=0.0, seed=5)
-    got = {tuple(r) for r in kept.collect()}
-    # type edges dropped by V3
-    assert not any(p == "rdf:type" for (_, _, p) in got)
-    # non-touching chain edges always kept
-    assert sum(1 for (_, _, p) in got if p == "chain") == 40
-    # touching edges with q=p=0 all dropped
-    assert not any(s == 0 for (s, _, _) in got)
-
-
-def test_v4_similarity(edges):
-    scores = vertex_scores(edges, "degree")
-    kept = sample_by_score_similarity(edges, scores, q=0.0, p=0.0, seed=7)
-    pairs = {(r.src, r.dst) for r in kept.collect()}
-    # chain-middle edges have equal degrees → similar → always kept
-    assert (110, 111) in pairs
-    # hub spokes: |61 - 1| >> stddev of the degree distribution → dropped
-    assert not any(a == 0 for (a, _) in pairs)
-
-
 def test_v1_keep_rate(spark):
     # 2000 touching edges: keep-rate ≈ q + (1-q)·p (independent coins)
     rows = [(0, i, "e") for i in range(1, 2001)]
@@ -149,25 +81,3 @@ def test_v1_keep_rate(spark):
     kept = sample_and_hold_v1(e, fv, q=q, p=p, seed=11, type_pred=None).count()
     expect = (q + (1 - q) * p) * 2000
     assert abs(kept - expect) < 0.05 * 2000
-
-
-def test_v2_visited_marking_is_role_agnostic(spark):
-    """A node visited as DST earlier in the canonical stream is no longer
-    fresh when it reappears as SRC: (1,5) precedes (5,9) in (src,dst,pred)
-    order, so 5 is visited by the time (5,9) streams — (5,9) must take the
-    q-branch even though it is 5's first appearance AS A SOURCE (the
-    round-3 per-role ranking held it at p)."""
-    e = spark.createDataFrame([(1, 5, "e1"), (5, 9, "e2")], ["src", "dst", "pred"])
-    fv = spark.createDataFrame([(5,)], ["id"])
-    kept_p = {
-        r.pred
-        for r in sample_and_hold_v2(e, fv, q=0.0, p=1.0, seed=3,
-                                    type_pred=None).collect()
-    }
-    assert kept_p == {"e1"}
-    kept_q = {
-        r.pred
-        for r in sample_and_hold_v2(e, fv, q=1.0, p=0.0, seed=3,
-                                    type_pred=None).collect()
-    }
-    assert kept_q == {"e2"}

@@ -7,7 +7,7 @@ import random
 import numpy as np
 import pytest
 
-from nous_spark.operators.semdedup import semantic_dedup, semantic_pairs
+from nous_spark.operators.semdedup import semantic_dedup
 
 
 def _mk_vectors(n=60, dim=8, seed=3, dups=6):
@@ -89,26 +89,6 @@ def test_semantic_dedup_matches_brute_force(spark, n_cells):
         m = np.array(vecs[0]); m2 = np.array(vecs[2000])
         c = float(m @ m2 / np.linalg.norm(m) / np.linalg.norm(m2))
         assert c < 0.97  # the chain really is transitive-only
-
-
-def test_semantic_pairs_within_cell_only_and_exact(spark):
-    rows = _mk_vectors(n=40, dups=4)
-    df = spark.createDataFrame(
-        [(i, v) for i, v in rows], "vec_id long, embedding array<double>")
-    pairs = semantic_pairs(df, dim=8, threshold=0.97, n_cells=4,
-                           seed=7).collect()
-    verdict = semantic_dedup(df, dim=8, threshold=0.97, n_cells=4,
-                             seed=7).collect()
-    cells = {r.vec_id: r.cell for r in verdict}
-    vecs = {i: np.array(v) for i, v in rows}
-    assert pairs, "planted copies must surface as pairs"
-    for p in pairs:
-        assert p.a < p.b
-        assert cells[p.a] == cells[p.b] == p.cell
-        a, b = vecs[p.a], vecs[p.b]
-        true = a @ b / np.linalg.norm(a) / np.linalg.norm(b)
-        assert abs(true - p.cosine) < 1e-5
-        assert p.cosine >= 0.97
 
 
 def test_semantic_dedup_all_singletons(spark):

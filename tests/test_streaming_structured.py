@@ -237,38 +237,6 @@ def test_streaming_near_dup_filter_decisions(spark, tmp_path):
     assert [r.doc_id for r in nd2.process_batch(late, 2).collect()] == [30]
 
 
-def test_start_near_dup_stream_end_to_end(spark, tmp_path):
-    """The foreachBatch wiring: two source files -> two microbatches;
-    kept outputs land per batch and planted cross-batch dups are gone."""
-    import glob
-
-    from nous_spark.streaming.batch_driver import start_near_dup_stream
-
-    base = ("shared boilerplate sentence that repeats across the crawl"
-            " with many identical tokens inside it")
-    src = str(tmp_path / "src")
-    b1 = spark.createDataFrame(
-        [(0, base), (1, "unique first-batch document body with its own"
-                        " words entirely")],
-        ["doc_id", "text"])
-    b2 = spark.createDataFrame(
-        [(10, base + " trailing"), (11, "another unique second-batch"
-                                        " document body distinct again")],
-        ["doc_id", "text"])
-    for b in (b1, b2):
-        b.coalesce(1).write.mode("append").parquet(src)
-    out = str(tmp_path / "out")
-    q = start_near_dup_stream(
-        spark, src, out, schema="doc_id LONG, text STRING")
-    q.awaitTermination(120)
-    kept = spark.read.parquet(*glob.glob(f"{out}/kept/batch=*"))
-    ids = sorted(r.doc_id for r in kept.collect())
-    # one representative of the boilerplate cluster + the two uniques
-    assert 1 in ids and 11 in ids
-    assert not (0 in ids and 10 in ids)
-    assert len(ids) == 3
-
-
 def test_session_window_matches_batch_sessionize(spark):
     """streaming_session_stats on a STATIC frame must agree with the
     batch gaps-and-islands rollup (same gap, no watermark cutoff in
