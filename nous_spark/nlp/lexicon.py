@@ -118,10 +118,3 @@ PERSON_TITLES = {"mr", "mrs", "ms", "dr", "prof", "president", "senator",
                  "professor", "judge", "gen", "capt", "sir"}
 
 NER_BLACKLIST = {"LOC", "ORG", "PER", "MISC", "NONE"}  # F13, NLPTripleParser.scala:67-70
-
-# NER tag → ontology type (predicateTypeMapper, NLPTripleParser.scala:30-32)
-PREDICATE_TYPE_MAP = {
-    "PER": "people", "PERSON": "people",
-    "ORG": "organization", "ORGANIZATION": "organization",
-    "LOC": "location", "LOCATION": "location",
-}

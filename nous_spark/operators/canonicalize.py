@@ -190,15 +190,21 @@ def build_canonical_store(
     alias_edges: DataFrame,
     path: str,
     buckets: int = 64,
-) -> None:
+) -> DataFrame:
     """Persist an incrementally updatable canonical mapping as a
     component store (operators/graph_inc.py) at ``{path}/cc`` whose ids
     are rep-order keys (``_key``): the store keeps every component's
     minimum id as its root, and the minimum key is the batch
     ``canonical_mapping`` representative, so root and representative
-    are one thing (parity pinned by tests)."""
+    are one thing (parity pinned by tests).
+
+    Returns the stored mapping decoded to ``(label, canonical_label)``
+    — what ``resolve_canonical_store`` would read back right after the
+    build — so a caller can rewrite through it without a read-back."""
     comp = connected_components(_keyed_edges(alias_edges), "a", "b")
     build_component_store(comp, f"{path}/cc", buckets=buckets)
+    return comp.select(_label("id").alias("label"),
+                       _label("component").alias("canonical_label"))
 
 
 def update_canonical_store(

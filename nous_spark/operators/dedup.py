@@ -759,10 +759,17 @@ def build_minhash_index(
         "seg", F.lit("base")).repartition(bands, "band").write.mode(
         "overwrite").partitionBy("band", "seg").parquet(f"{path}/banded")
     spark.range(1).select(
-        F.lit(int(n)).alias("n"),
-        F.lit(int(num_hashes)).alias("num_hashes"),
-        F.lit(int(bands)).alias("bands"),
+        F.lit(int(n)).cast("int").alias("n"),
+        F.lit(int(num_hashes)).cast("int").alias("num_hashes"),
+        F.lit(int(bands)).cast("int").alias("bands"),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+_META_SCHEMA = "n INT, num_hashes INT, bands INT"
+
+
+def _read_meta(spark, path: str):
+    return spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
 
 
 def update_minhash_index(
@@ -784,7 +791,7 @@ def update_minhash_index(
     import uuid
 
     spark = df.sparkSession
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = _read_meta(spark, path)
     seg = seg if seg is not None else f"u{uuid.uuid4().hex[:12]}"
     # same checkpoint-once discipline as build
     sh = shingles(df, text_col, id_col, m.n).localCheckpoint(eager=True)
@@ -833,7 +840,7 @@ def compact_minhash_index(spark, path: str,
     banded = spark.read.parquet(f"{path}/banded")
     shingle = spark.read.parquet(f"{path}/shingles")
     nb, ns = files_of(banded), files_of(shingle)
-    bands = spark.read.parquet(f"{path}/meta").collect()[0].bands
+    bands = _read_meta(spark, path).bands
     if exclude_segs:
         seg_out = F.when(F.col("seg").isin(*exclude_segs),
                          F.col("seg")).otherwise(F.lit("base"))
@@ -889,7 +896,7 @@ def dedup_against_index(
     pinned in tests and in the VALUES-oracle verifier).
     """
     spark = df.sparkSession
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = _read_meta(spark, path)
     sh_new = shingles(df, text_col, id_col, m.n).localCheckpoint(eager=True)
     sig_new = minhash_signatures(sh_new, m.num_hashes)
     banded_new = _banded(sig_new, m.bands, m.num_hashes // m.bands)

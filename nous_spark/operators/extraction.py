@@ -34,14 +34,8 @@ from pyspark.sql import functions as F
 
 from nous_spark.schemas import TRIPLE_SCHEMA
 
-PROSE_LANGS = {"markdown", "md", "text", "txt", "rst", "html", "en"}
-
 NARROW_TRIPLE_SCHEMA = (
     "subj string, pred string, obj string, conf double, kind string, doc_id long"
-)
-DOC_SCHEMA = (
-    "doc_id long, repo string, path string, commit string, lang string,"
-    " content_sha string"
 )
 
 

@@ -263,9 +263,16 @@ def build_component_store(
         .parquet(f"{path}/mapping")
     )
     spark.range(1).select(
-        F.lit(int(buckets)).alias("buckets"),
+        F.lit(int(buckets)).cast("int").alias("buckets"),
         F.lit(id_type).alias("id_type"),
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+
+
+_META_SCHEMA = "buckets INT, id_type STRING"
+
+
+def _read_meta(spark: SparkSession, path: str):
+    return spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
 
 
 def _mapping_schema(id_type: str) -> str:
@@ -305,7 +312,7 @@ def resolve_component_store(
     the folded remap log. ``ids`` (a one-column ``id`` frame) prunes
     the read to the buckets those ids hash to — the point of the
     layout; ``None`` reads the full mapping (reports, compaction)."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = _read_meta(spark, path)
     m = _mapping_with_prune(spark, path, meta.buckets, meta.id_type,
                             ids, exclude_segs)
     remap = _read_remap(spark, path, meta.id_type, exclude_segs)
@@ -335,7 +342,7 @@ def update_component_store(
 
     Returns {"touched_roots", "merged_roots", "new_vertices"}.
     """
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = _read_meta(spark, path)
     seg = f"u{update_id}"
 
     e, verts = _delta(new_edges, src, dst)
@@ -457,7 +464,7 @@ def compact_component_store(
     the streaming ingest excludes the possibly-torn in-flight batch so
     its replay can still replace its own segment.
     """
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
+    meta = _read_meta(spark, path)
     m = spark.read.schema(_mapping_schema(meta.id_type)).parquet(
         f"{path}/mapping")
     n_files = m.select(F.input_file_name()).distinct().count()
@@ -505,7 +512,8 @@ def compact_component_store(
         _fs_delete(spark, f"{path}/remap")
     return {
         "mapping_files_before": n_files,
-        "mapping_files_after": spark.read.parquet(f"{path}/mapping")
+        "mapping_files_after": spark.read.schema(
+            _mapping_schema(typ)).parquet(f"{path}/mapping")
         .select(F.input_file_name()).distinct().count(),
         "remap_entries_folded": len(remap_fold),
     }

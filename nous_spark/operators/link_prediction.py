@@ -32,11 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-_P_SCHEMA = T.StructType([
-    T.StructField("user", T.LongType()),
-    T.StructField("factors", T.ArrayType(T.DoubleType())),
-])
-
 _UPD_SCHEMA = T.StructType([
     T.StructField("kind", T.IntegerType()),   # 0 = P row, 1 = Q delta, 2 = B delta
     T.StructField("idx", T.LongType()),       # user (kind 0) or item (kind 1/2)

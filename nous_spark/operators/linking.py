@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 ALIAS_PREDICATES = ["rdfs:label", "skos:preflabel", "ispreferredmeaningof"]
-ALIAS_SEP = " <Alias> "
 
 
 def kg_vertices(kg_triples: DataFrame) -> DataFrame:

@@ -40,24 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 MS_IN_YEAR = 31556952000
-
-INSTANCE_SCHEMA = T.StructType([
-    T.StructField("inst_id", T.LongType(), False),
-    T.StructField("pat_str", T.StringType(), False),
-    T.StructField("ins_str", T.StringType(), False),
-    T.StructField("pat", T.ArrayType(T.StructType([
-        T.StructField("a", T.LongType()), T.StructField("b", T.LongType()),
-        T.StructField("c", T.LongType()),
-    ])), False),
-    T.StructField("ins", T.ArrayType(T.StructType([
-        T.StructField("x", T.LongType()), T.StructField("y", T.LongType()),
-        T.StructField("z", T.LongType()),
-    ])), False),
-    T.StructField("ts", T.LongType(), False),
-])
 
 
 def read_int_quads(spark: SparkSession, path: str, batch_ms: int = MS_IN_YEAR) -> DataFrame:

@@ -435,7 +435,7 @@ def build_mis_store(
         edges.withColumn("seg", F.lit("base")),
         f"{path}/edges", ["pred", "seg"], "pred", dynamic=False)
     spark.range(1).select(
-        F.lit(int(buckets)).alias("buckets"),
+        F.lit(int(buckets)).cast("int").alias("buckets"),
         F.lit("|".join(f"{a},{b},{s}" for a, b, s in pairs))
         .alias("pairs"),
         F.lit(";".join(f"{a},{b},{c}" for a, b, c in chains))
@@ -443,8 +443,11 @@ def build_mis_store(
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
+_META_SCHEMA = "buckets INT, pairs STRING, chains STRING"
+
+
 def _meta(spark: SparkSession, path: str):
-    m = spark.read.parquet(f"{path}/meta").collect()[0]
+    m = spark.read.schema(_META_SCHEMA).parquet(f"{path}/meta").collect()[0]
     pairs = []
     for p in m.pairs.split("|"):
         if not p:
@@ -452,8 +455,7 @@ def _meta(spark: SparkSession, path: str):
         f = p.split(",")
         pairs.append((f[0], f[1], f[2] if len(f) > 2 else "chain"))
     chains = []
-    raw = m.chains if "chains" in m.__fields__ else ""
-    for p in (raw or "").split(";"):
+    for p in m.chains.split(";"):
         if p:
             a, b, c = p.split(",")
             chains.append((a, b, c))
@@ -562,7 +564,8 @@ def compact_mis_store(
     segment byte-for-byte."""
     buckets, _pairs, _chains = _meta(spark, path)
     files_before = len(
-        spark.read.parquet(f"{path}/postings").inputFiles())
+        spark.read.schema(_POSTINGS_SCHEMA).parquet(
+            f"{path}/postings").inputFiles())
 
     def _split(df):
         if not exclude_segs:
@@ -619,7 +622,8 @@ def compact_mis_store(
     for name in ("postings", "counts", "edges"):
         swap_dir(spark, f"{path}/{name}_tmp", f"{path}/{name}")
     files_after = len(
-        spark.read.parquet(f"{path}/postings").inputFiles())
+        spark.read.schema(_POSTINGS_SCHEMA).parquet(
+            f"{path}/postings").inputFiles())
     return {"files_before": files_before, "files_after": files_after}
 
 

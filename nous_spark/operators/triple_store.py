@@ -27,6 +27,12 @@ table itself incremental, completing the extract → link → canonicalize
   component store over rep-order label keys, whose roots are the
   representatives.
 
+Contract: the store holds ``subj, pred, obj`` strings; build and update
+project their input to exactly those columns. Every read declares the
+stored layout (``_TRIPLES_SCHEMA``), so planning a query runs no Spark
+job (no footer-merge schema inference) and a store built from zero
+triples reads and queries as empty.
+
 Idempotency: every update's writes are keyed by ``seg``/``batch``
 partition with dynamic overwrite, and the rewrite/patch computation
 depends only on the store state EXCLUDING the update's own segments —
@@ -63,12 +69,15 @@ from nous_spark.operators.graph_inc import (
 )
 
 DEFAULT_SALT_BUCKETS = 16
+# the layout ``_write_segment`` writes: data columns, then the
+# ``(pred, seg)`` partition columns
+_TRIPLES_SCHEMA = "subj STRING, obj STRING, salt INT, pred STRING, seg STRING"
 
 
 def _write_segment(triples: DataFrame, path: str, seg: str,
                    salt_buckets: int, dynamic: bool) -> None:
     salted = (
-        triples.withColumn(
+        triples.select("subj", "pred", "obj").withColumn(
             "salt",
             F.pmod(F.xxhash64("subj"), F.lit(salt_buckets)).cast("int"))
         .withColumn("seg", F.lit(seg))
@@ -90,10 +99,10 @@ def build_triple_store(
     salt_buckets: int = DEFAULT_SALT_BUCKETS,
 ) -> None:
     """Build the store: canonical store from the alias edges, then the
-    triples rewritten through the full mapping into ``seg=base``."""
-    spark = triples.sparkSession
-    build_canonical_store(alias_edges, f"{path}/canon", buckets=buckets)
-    mapping = resolve_canonical_store(spark, f"{path}/canon")
+    triples, rewritten through the mapping that build returns, into
+    ``seg=base``."""
+    mapping = build_canonical_store(alias_edges, f"{path}/canon",
+                                    buckets=buckets)
     _write_segment(rewrite_triples(triples, mapping), path, "base",
                    salt_buckets, dynamic=False)
 
@@ -156,14 +165,16 @@ def read_triple_store(
     """Current canonical view of the store. ``preds`` pushes into the
     partitioned scan (file-level pruning on the ``pred`` dirs); the
     patch chain (tiny by contract) applies as one broadcast join per
-    endpoint column. Segment/salt bookkeeping columns are dropped."""
-    t = spark.read.parquet(f"{path}/triples")
+    endpoint column. Segment/salt bookkeeping columns are dropped.
+
+    The read declares ``_TRIPLES_SCHEMA``, so planning it runs no Spark
+    job and a store built from zero triples reads as empty."""
+    t = spark.read.schema(_TRIPLES_SCHEMA).parquet(f"{path}/triples")
     if exclude_segs:
         t = t.filter(~F.col("seg").isin(*exclude_segs))
     if preds is not None:
         t = t.filter(F.col("pred").isin(*preds))
-    cols = [c for c in t.columns if c not in ("seg", "salt")]
-    t = t.select(cols)
+    t = t.select("subj", "obj", "pred")
     if not _fs_exists(spark, f"{path}/patches"):
         return t
     p = spark.read.schema("old STRING, new STRING, seg STRING").parquet(
@@ -172,7 +183,7 @@ def read_triple_store(
         p = p.filter(~F.col("seg").isin(*exclude_segs))
     rows = [(r.old, r.new) for r in p.collect()]
     t = _apply_remap(_apply_remap(t, rows, "subj"), rows, "obj")
-    return t.select(cols)
+    return t.select("subj", "obj", "pred")
 
 
 def compact_triple_store(
@@ -189,8 +200,12 @@ def compact_triple_store(
     canonical store compacts separately (``compact_canonical_store``) —
     its remap log is still needed by future ``rep_changes`` calls only
     for their own segments, so either order is safe."""
+    def n_files():
+        return len(spark.read.schema(_TRIPLES_SCHEMA).parquet(
+            f"{path}/triples").inputFiles())
+
     full = read_triple_store(spark, path)
-    n_files_before = len(spark.read.parquet(f"{path}/triples").inputFiles())
+    n_files_before = n_files()
     salted = (
         full.withColumn(
             "salt",
@@ -204,5 +219,5 @@ def compact_triple_store(
     )
     swap_dir(spark, f"{path}/triples_compact_tmp", f"{path}/triples")
     _fs_delete(spark, f"{path}/patches")
-    n_files_after = len(spark.read.parquet(f"{path}/triples").inputFiles())
+    n_files_after = n_files()
     return {"files_before": n_files_before, "files_after": n_files_after}

@@ -26,30 +26,3 @@ TRIPLE_SCHEMA = T.StructType([
     T.StructField("src", T.StringType(), True),
     T.StructField("content_sha", T.StringType(), True),
 ])
-
-MENTION_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType(), False),
-    T.StructField("mention", T.StringType(), False),
-    T.StructField("ner_type", T.StringType(), False),
-])
-
-EDGE_SCHEMA = T.StructType([
-    T.StructField("src", T.LongType(), False),
-    T.StructField("dst", T.LongType(), False),
-    T.StructField("pred", T.StringType(), False),
-])
-
-VERTEX_SCHEMA = T.StructType([
-    T.StructField("id", T.LongType(), False),
-    T.StructField("label", T.StringType(), False),
-])
-
-LINEAGE_SCHEMA = T.StructType([
-    T.StructField("stage", T.StringType(), False),
-    T.StructField("batch_id", T.IntegerType(), False),
-    T.StructField("partition_id", T.IntegerType(), False),
-    T.StructField("rows_in", T.LongType(), False),
-    T.StructField("rows_out", T.LongType(), False),
-    T.StructField("sha_ok", T.BooleanType(), False),
-    T.StructField("wall_ms", T.DoubleType(), False),
-])

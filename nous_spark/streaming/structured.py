@@ -572,12 +572,13 @@ def streaming_index_dedup(
     """
     from nous_spark.operators.dedup import (
         _banded,
+        _read_meta,
         minhash_signatures,
         shingles,
     )
 
     checkpoint_dir = checkpoint_dir or f"{out_dir}/_stream_checkpoint"
-    m = spark.read.parquet(f"{index_path}/meta").collect()[0]
+    m = _read_meta(spark, index_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _index_dedup_batch(

@@ -406,6 +406,21 @@ def test_minhash_index_incremental_equals_batch(spark, tmp_path):
     assert (201, 1) in got2 and (201, 101) in got2
 
 
+def test_declared_minhash_meta_schema_matches_written_meta(
+        spark, tmp_path):
+    from pyspark.sql.types import StructType
+
+    from nous_spark.operators.dedup import _META_SCHEMA, build_minhash_index
+
+    path = str(tmp_path / "idx")
+    build_minhash_index(
+        spark.createDataFrame([(1, "alpha beta gamma delta")],
+                              ["doc_id", "text"]),
+        path, n=2, num_hashes=16, bands=4)
+    inferred = spark.read.parquet(f"{path}/meta").schema
+    assert StructType.fromDDL(_META_SCHEMA) == inferred
+
+
 def test_minhash_index_meta_pins_params(spark, tmp_path):
     """The querying batch hashes with the INDEX's parameters, not its
     own defaults — meta is read back, so a drifted caller cannot

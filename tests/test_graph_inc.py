@@ -310,3 +310,19 @@ def test_canonical_store_compaction_preserves_resolution(spark, tmp_path):
     got = {r.label: r.canonical_label
            for r in resolve_canonical_store(spark, path).collect()}
     assert got["Acme Corporation"] == "a-very-long-canonical-name"
+
+
+def test_declared_component_meta_schema_matches_written_meta(
+        spark, tmp_path):
+    """The canonical store is a component store, so this pins the meta
+    both share."""
+    from pyspark.sql.types import StructType
+
+    from nous_spark.operators.canonicalize import build_canonical_store
+    from nous_spark.operators.graph_inc import _META_SCHEMA
+
+    path = str(tmp_path / "canon")
+    build_canonical_store(
+        spark.createDataFrame(ALIAS_EDGES, ["a", "b"]), path, buckets=8)
+    inferred = spark.read.parquet(f"{path}/cc/meta").schema
+    assert StructType.fromDDL(_META_SCHEMA) == inferred

@@ -8,11 +8,16 @@ audit.
   ``inputFiles()`` instead.
 - No row-at-a-time ``F.udf``: every Python-side kernel is Arrow-batched
   (pandas_udf / mapInPandas / mapInArrow / applyInPandas*).
-- No test-only definitions: every top-level package function and class
-  is reachable from product code — the gates, scripts, benchmarks and
-  module-level package code — through the code (not the docstrings or
-  comments) of reachable definitions. A definition only a test calls
-  is dead unless ``_PUBLIC_API`` names it, with the reason it stays.
+- No test-only definitions: every top-level package function, class
+  and module-level constant is reachable from product code — the
+  gates, scripts, benchmarks and the rest of the module-level package
+  code — through the code (not the docstrings or comments) of
+  reachable definitions. A definition only a test calls is dead unless
+  ``_PUBLIC_API`` names it, with the reason it stays.
+- Every parquet read on a ``spark.read`` chain declares its schema,
+  unless ``_SCHEMALESS_READS`` names the function with the reason:
+  schema inference runs a Spark job at planning time and cannot read
+  a table that has no data files yet.
 """
 
 from __future__ import annotations
@@ -129,12 +134,30 @@ def _code_words(node, docstrings):
             yield from re.findall(r"\w+", n.value)
 
 
+def _assigned_names(node):
+    """The names a module-level ``NAME = ...`` statement defines; empty
+    for any other statement and for dunders such as ``__all__``."""
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        targets = [node.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names.extend(e.id for e in elts)
+    return [n for n in names if not n.startswith("__")]
+
+
 def test_every_package_definition_is_referenced():
-    """Close over top-level package definitions by name, starting from
-    every non-test file outside the package and from module-level
-    package code. A name counts as used only where it appears in code:
-    docstrings and comments do not keep a definition alive, and tests
-    are not roots."""
+    """Close over top-level package definitions and constants by name,
+    starting from every non-test file outside the package and from the
+    other module-level package code. A name counts as used only where
+    it appears in code: docstrings and comments do not keep a
+    definition alive, and tests are not roots."""
     roots, defs = set(), {}
     for path in _py_files(REPO):
         if _is_test(path):
@@ -144,9 +167,13 @@ def test_every_package_definition_is_referenced():
         docstrings = _docstrings(tree)
         in_pkg = path.startswith(PKG + os.sep)
         for node in tree.body:
+            names = _assigned_names(node) if in_pkg else []
             if in_pkg and isinstance(node, _DEF):
-                defs.setdefault(node.name, set()).update(
-                    _code_words(node, docstrings))
+                names = [node.name]
+            if names:
+                words = set(_code_words(node, docstrings))
+                for name in names:
+                    defs.setdefault(name, set()).update(words)
             else:
                 roots.update(_code_words(node, docstrings))
     reached, todo = set(), [n for n in defs if n in roots]
@@ -159,4 +186,93 @@ def test_every_package_definition_is_referenced():
     dead = sorted(unreached - set(_PUBLIC_API))
     assert dead == [], dead
     stale = sorted(set(_PUBLIC_API) - unreached)
+    assert stale == [], stale
+
+
+# Package parquet reads that still infer their schema:
+# "module:function" -> why.
+_SCHEMALESS_READS = {
+    "sources.readers:read_source_table": "external input: the source "
+                                         "table's schema is the "
+                                         "caller's",
+    "sources.sinks:read_triples_encoded": "the encoded table carries "
+                                          "whatever extra columns the "
+                                          "writer's input had",
+    "plans.lineage:StateStore.read_stage": "pipeline read-back of a "
+                                           "stage output, whose schema "
+                                           "is the stage's",
+    "plans.lineage:StateStore.read_all_batches": "pipeline read-back "
+                                                 "of every batch of a "
+                                                 "stage",
+    "plans.lineage:StateStore.lineage": "pipeline read-back of the "
+                                        "lineage rows",
+    "operators.dedup:compact_minhash_index": "MinHash banded and "
+                                             "shingles data, not "
+                                             "converted yet",
+    "operators.dedup:dedup_against_index": "MinHash banded and shingles "
+                                           "data, not converted yet",
+    "streaming.structured:_index_dedup_batch": "MinHash banded and "
+                                               "shingles data, not "
+                                               "converted yet",
+    "operators.ann:ivf_add_vectors": "IVF vectors, not converted yet",
+    "operators.ann:ivf_load_index": "IVF centroids and vectors, not "
+                                    "converted yet",
+    "streaming.structured:_ivf_ingest_batch": "IVF vectors, not "
+                                              "converted yet",
+    "streaming.batch_driver:StreamingNearDupFilter._frontier":
+        "near-dup frontier signatures, not converted yet",
+    "streaming.batch_driver:StreamingNearDupFilter.process_batch":
+        "near-dup frontier signatures, not converted yet",
+}
+
+
+def _read_chain(call):
+    """The method names between ``.parquet(`` and ``.read`` when
+    ``call`` is a parquet read on a ``spark.read`` chain, else None."""
+    if not (isinstance(call.func, ast.Attribute)
+            and call.func.attr == "parquet"):
+        return None
+    names, node = [], call.func.value
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            if node.attr == "read":
+                return names
+            names.append(node.attr)
+            node = node.value
+        else:
+            return None
+
+
+def _parquet_reads(node, scope=()):
+    """(qualified enclosing function, line, declares a schema) for every
+    parquet read on a ``spark.read`` chain under ``node``."""
+    for child in ast.iter_child_nodes(node):
+        inner = scope + (child.name,) if isinstance(child, _DEF) else scope
+        if isinstance(child, ast.Call):
+            chain = _read_chain(child)
+            if chain is not None:
+                yield ".".join(inner), child.lineno, "schema" in chain
+        yield from _parquet_reads(child, inner)
+
+
+def test_package_reads_declare_schemas():
+    """A store the package writes is read under a declared schema; the
+    allowlist names every read that still infers one, and an entry
+    whose reads all gained a schema is stale."""
+    undeclared, schemaless = [], set()
+    for path in _py_files(PKG):
+        module = os.path.relpath(path, PKG)[:-3].replace(os.sep, ".")
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for func, line, declared in _parquet_reads(tree):
+            key = f"{module}:{func}"
+            if declared:
+                continue
+            schemaless.add(key)
+            if key not in _SCHEMALESS_READS:
+                undeclared.append(f"{key} (line {line})")
+    assert undeclared == [], undeclared
+    stale = sorted(set(_SCHEMALESS_READS) - schemaless)
     assert stale == [], stale

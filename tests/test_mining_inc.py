@@ -454,3 +454,14 @@ def test_chain3_randomized_parity(spark, tmp_path):
     with pytest.raises(ValueError, match="chain_patterns entries"):
         build_mis_store(_df(spark, base), str(tmp_path / "x"),
                         chain_patterns=[("p", "q")])
+
+
+def test_declared_meta_schema_matches_written_meta(spark, tmp_path):
+    from pyspark.sql.types import StructType
+
+    from nous_spark.operators.mining_inc import _META_SCHEMA
+
+    path = str(tmp_path / "mis")
+    build_mis_store(_df(spark, BASE), path, pair_patterns=PAIRS, buckets=8)
+    inferred = spark.read.parquet(f"{path}/meta").schema
+    assert StructType.fromDDL(_META_SCHEMA) == inferred

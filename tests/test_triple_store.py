@@ -1,13 +1,17 @@
 """Incremental triple store (operators/triple_store.py): batch parity,
-patch-log boundedness, torn replay, pred pruning, compaction."""
+patch-log boundedness, torn replay, pred pruning, compaction, and the
+declared read schema (no planning job, empty stores, no drift)."""
 
 import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from nous_spark.operators.bgp import match_path_store, match_pattern_store
 from nous_spark.operators.canonicalize import canonical_mapping, rewrite_triples
 from nous_spark.operators.triple_store import (
+    _TRIPLES_SCHEMA,
     build_triple_store,
     compact_triple_store,
     read_triple_store,
@@ -227,3 +231,47 @@ def test_streaming_triple_ingest(spark, tmp_path):
     assert _rows(read_triple_store(spark, path)) == _batch(
         spark, BASE_TRIPLES + DELTA_TRIPLES + MERGE_TRIPLES,
         BASE_EDGES + DELTA_EDGES + MERGE_EDGES)
+
+
+def test_declared_triples_schema_matches_written_layout(spark, tmp_path):
+    path = str(tmp_path / "ts")
+    _build_and_update(spark, path)
+    inferred = spark.read.parquet(f"{path}/triples").schema
+    assert StructType.fromDDL(_TRIPLES_SCHEMA) == inferred
+
+
+def test_empty_store_reads_and_queries_empty(spark, tmp_path):
+    path = str(tmp_path / "ts")
+    build_triple_store(
+        spark.createDataFrame([], "subj string, pred string, obj string"),
+        spark.createDataFrame([("acme", "Acme Corporation")], ["a", "b"]),
+        path, buckets=4, salt_buckets=2)
+    assert _rows(read_triple_store(spark, path)) == []
+    assert match_pattern_store(
+        spark, path, [("?s", "employs", "?o")]).collect() == []
+    assert match_path_store(spark, path, "calls", 1, 3).collect() == []
+
+
+def test_planning_a_store_query_runs_no_job(spark, tmp_path):
+    """The store read declares its schema, so building the query plans
+    of a store with no patches launches no Spark job; the count at the
+    end shows the job group does record jobs."""
+    path = str(tmp_path / "ts")
+    build_triple_store(
+        spark.createDataFrame(BASE_TRIPLES, ["subj", "pred", "obj"]),
+        spark.createDataFrame(BASE_EDGES, ["a", "b"]),
+        path, buckets=8, salt_buckets=4)
+    sc = spark.sparkContext
+    group = "test-store-planning"
+    sc.setJobGroup(group, "plan store queries")
+    try:
+        read_triple_store(spark, path)
+        match_pattern_store(spark, path, [("?who", "employs", "?mid"),
+                                          ("?mid", "depends_on", "?tgt")])
+        view = match_path_store(spark, path, "employs", 1, 2)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        view.count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
